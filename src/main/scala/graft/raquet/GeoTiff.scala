@@ -993,6 +993,16 @@ object GeoTiff {
     }
   }
 
+  /** The 14 gdalwarp resampling algorithms [[warpTile]] implements
+    * (`raster2raquet.py:82-101`), kernels first, then footprint statistics. */
+  val WarpResamplings: Set[String] = scala.collection.immutable.ListSet(
+    "near", "bilinear", "cubic", "cubicspline", "lanczos",
+    "average", "sum", "rms", "min", "max", "med", "q1", "q3", "mode")
+
+  private def unsupportedResampling(r: String): String =
+    s"resampling $r unsupported — one of ${WarpResamplings.mkString("/")} " +
+      "(gdalwarp -r, raster2raquet.py:82-101)"
+
   /** Warp one mercator tile from the source; null when every pixel is
     * nodata (empty-tile filter P6). Pixels come from `sampler` (a window
     * reader at scale, a full [[Source]] in tests).
@@ -1207,10 +1217,7 @@ object GeoTiff {
                 (math.abs(u1 - u), math.abs(v1 - v))
               }
             footprintAt(u, v, su, sv, resampling)
-          case other => throw new IllegalArgumentException(
-            s"resampling $other unsupported — one of near/bilinear/cubic/" +
-              "cubicspline/lanczos/average/sum/rms/min/max/med/q1/q3/mode " +
-              "(gdalwarp -r, raster2raquet.py:82-101)")
+          case other => throw new IllegalArgumentException(unsupportedResampling(other))
         }
         val value =
           if (integral && resampling != "near" && isValid(raw)) math.rint(raw)
@@ -1428,6 +1435,7 @@ object GeoTiff {
       bandLayout: String = "sequential",
       quality: Option[Int] = None,
       overviewResampling: String = "average"): RaquetMetadata = {
+    require(WarpResamplings(resampling), unsupportedResampling(resampling))
     require(Downsample.Resamplings(overviewResampling) ||
         Downsample.ConvWeights.contains(overviewResampling),
       s"overview resampling must be one of " +

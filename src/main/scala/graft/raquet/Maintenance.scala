@@ -200,10 +200,10 @@ object Maintenance {
     * superset, never a hole. */
   def compact(spark: SparkSession, dir: String,
       maxRecordsPerFile: Long = 0): CompactReport = {
-    val meta = RaquetIO.readMetadata(spark, dir)
+    val (all, meta) = RaquetIO.open(spark, dir)
     val before = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".parquet"))
-    val data = spark.read.parquet(dir).filter(col("block") =!= 0L)
+    val data = all.filter(col("block") =!= 0L)
     val schema = data.schema
     val rows = data.count()
     val tmp = dir + "/.compact-tmp"
@@ -245,8 +245,7 @@ object Maintenance {
     * null-filled to the dataset schema, matching what the writer emits for
     * data rows. */
   def upsert(spark: SparkSession, dir: String, updates: DataFrame): UpsertReport = {
-    val meta = RaquetIO.readMetadata(spark, dir)
-    val all = spark.read.parquet(dir)
+    val (all, meta) = RaquetIO.open(spark, dir)
     val schema = all.schema
     val keyCols =
       if (schema.fieldNames.contains("time_cf")) Seq("block", "time_cf")
@@ -344,9 +343,8 @@ object Maintenance {
     * [[Pyramid.buildLevel]] does not group by. */
   def upsertWithPyramid(spark: SparkSession, dir: String,
       updates: DataFrame): UpsertReport = {
-    val meta = RaquetIO.readMetadata(spark, dir)
-    require(!updates.columns.contains("time_cf") &&
-      !spark.read.parquet(dir).columns.contains("time_cf"),
+    val (all, meta) = RaquetIO.open(spark, dir)
+    require(!updates.columns.contains("time_cf") && !all.columns.contains("time_cf"),
       s"$dir: pyramid refresh over time-series datasets is unsupported")
     val badZoom = updates
       .filter(quadbin_zoom(col("block")) =!= meta.maxZoom).count()

@@ -1,9 +1,12 @@
 package graft.raquet
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.geo.Wkt
 import graft.quadbin.{Polyfill, Quadbin}
@@ -51,32 +54,81 @@ object RaquetIO {
     }
   }
 
-  /** S2: fetch + parse the `block = 0` metadata row. Partitioned datasets
-    * have one per file; they describe the same dataset, so LIMIT 1 is the
-    * spec's own dedupe idiom (`format-specs/raquet.md:160-175`). */
-  def readMetadata(spark: SparkSession, path: String): RaquetMetadata = {
-    val rows = spark.read.parquet(path)
-      .filter(col("block") === 0L).select("metadata").limit(1).collect()
-    require(rows.nonEmpty, s"no metadata row (block=0) in $path")
-    RaquetMetadata.parse(rows(0).getString(0))
+  /** One opened path: its parquet schema and parsed metadata row, valid
+    * while the path lists the same files and the session infers schemas
+    * the same way. */
+  private final case class Opened(files: Seq[(String, Long, Long)],
+      confs: Seq[Option[String]], schema: StructType, meta: RaquetMetadata)
+
+  /** Session confs that change what parquet schema inference returns. */
+  private val SchemaConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled")
+
+  /** Per-session open cache, keyed weakly by the session object: a stopped
+    * or replaced session drops its entries, and `newSession()` starts cold. */
+  private val opened = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Opened]]())
+
+  /** The files under `path` as sorted (file, length, mtime) — one driver-side
+    * listing, no Spark job. None when the path cannot be listed as is (a
+    * glob, or a missing path: the uncached read reports it). */
+  private def listing(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] = {
+    val p = new HPath(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    try {
+      val it = fs.listFiles(p, true)
+      val b = Vector.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val s = it.next()
+        b += ((s.getPath.toString, s.getLen, s.getModificationTime))
+      }
+      Some(b.result().sorted)
+    } catch { case _: java.io.FileNotFoundException => None }
   }
+
+  /** Open `path`: the whole parquet table (metadata row included) and its
+    * parsed metadata. A repeat open in the same session of an unchanged
+    * path runs no Spark job; otherwise one schema-inference job plus one job
+    * for the `block = 0` rows. Partitioned datasets carry one metadata row
+    * per file; they describe the same dataset, so the first is taken — the
+    * spec's own dedupe (`format-specs/raquet.md:160-175`). */
+  private[raquet] def open(spark: SparkSession, path: String): (DataFrame, RaquetMetadata) = {
+    val files = listing(spark, path)
+    val confs = SchemaConfs.map(spark.conf.getOption)
+    val byPath = opened.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, Opened]())
+    Option(byPath.get(path)).filter(o => files.contains(o.files) && o.confs == confs) match {
+      case Some(o) => (spark.read.schema(o.schema).parquet(path), o.meta)
+      case None =>
+        val df = spark.read.parquet(path)
+        val rows = df.filter(col("block") === 0L).select("metadata").collect()
+        require(rows.nonEmpty, s"no metadata row (block=0) in $path")
+        val meta = RaquetMetadata.parse(rows(0).getString(0))
+        files.foreach(f => byPath.put(path, Opened(f, confs, df.schema, meta)))
+        (df, meta)
+    }
+  }
+
+  /** S2: fetch + parse the `block = 0` metadata row. */
+  def readMetadata(spark: SparkSession, path: String): RaquetMetadata = open(spark, path)._2
 
   /** S1+S3: full scan, metadata row(s) excluded (`docs/engines.md:118-121`). */
   def read(spark: SparkSession, path: String): RaquetDataset = {
-    val meta = readMetadata(spark, path)
-    val data = spark.read.parquet(path).filter(col("block") =!= 0L)
-    RaquetDataset(data, meta)
+    val (df, meta) = open(spark, path)
+    RaquetDataset(df.filter(col("block") =!= 0L), meta)
   }
 
   /** S4: point query — only the tile covering (lon, lat) at `zoom` (default
     * max_zoom). Sorted `block` + pushed equality = a handful of pages read. */
   def readAt(spark: SparkSession, path: String, lon: Double, lat: Double,
       zoom: Int = -1): RaquetDataset = {
-    val meta = readMetadata(spark, path)
+    val (df, meta) = open(spark, path)
     val z = if (zoom < 0) meta.maxZoom else meta.clampZoom(zoom)
     val cell = Quadbin.fromLonLat(lon, lat, z)
-    val data = spark.read.parquet(path).filter(col("block") === cell)
-    RaquetDataset(data, meta)
+    RaquetDataset(df.filter(col("block") === cell), meta)
   }
 
   /** OR-of-BETWEEN predicate over compacted Morton ranges. Ranges at zoom z
@@ -109,12 +161,11 @@ object RaquetIO {
     */
   def readRegion(spark: SparkSession, path: String, wkt: String,
       zoom: String = "max", mode: String = Polyfill.Intersects): RaquetDataset = {
-    val meta = readMetadata(spark, path)
+    val (base, meta) = open(spark, path)
     val geom = Wkt.parse(wkt)
     val z = resolveZoom(geom, meta, zoom)
     val ranges = Polyfill.ranges(geom, z)
-    var df = spark.read.parquet(path)
-    df = df.filter(cappedExactRangeFilter(ranges))
+    var df = base.filter(cappedExactRangeFilter(ranges))
     if (mode != Polyfill.Intersects) {
       val cells = Polyfill.cells(geom, z, mode)
       val cellDf = spark.createDataFrame(
@@ -174,10 +225,9 @@ object RaquetIO {
   def regionStatsTiles(spark: SparkSession, path: String, wkt: String,
       band: String, zoom: String = "max"): DataFrame = {
     import graft.functions.GraftFunctions._
-    val meta = readMetadata(spark, path)
+    val (base, meta) = open(spark, path)
     val geom = Wkt.parse(wkt)
     val z = resolveZoom(geom, meta, zoom)
-    val base = spark.read.parquet(path)
     val statCols = Seq("count", "min", "max", "sum", "mean", "stddev")
       .map(s => s"${band}_$s")
     val hasStats = statCols.forall(base.columns.contains)
@@ -224,9 +274,8 @@ object RaquetIO {
   def zonalStatsFastTiles(spark: SparkSession, path: String,
       zones: Seq[(Long, String)], band: String): DataFrame = {
     import graft.functions.GraftFunctions._
-    val meta = readMetadata(spark, path)
+    val (base, meta) = open(spark, path)
     val z = meta.maxZoom
-    val base = spark.read.parquet(path)
     val statCols = Seq("count", "min", "max", "sum", "mean", "stddev")
       .map(s => s"${band}_$s")
     require(statCols.forall(base.columns.contains),

@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions._
 import graft.quadbin.Quadbin
-import graft.raquet.{BandKernel, Downsample, FixtureGen, PixelCodec, RaquetIO}
+import graft.raquet.{BandKernel, Downsample, FixtureGen, PixelCodec, RaquetIO, RaquetMetadata}
 
 /** Reader/writer + raster expression tests over the committed gradient16
   * fixture (see [[graft.raquet.FixtureGen]] for the closed-form pixel
@@ -596,5 +598,108 @@ class RaquetIOSpec extends SparkSpec {
     }
     assert(!graft.quadbin.Polyfill.inRanges(ranges.head._1 - 1,
       ranges.map(_._1), ranges.map(_._2)))
+  }
+
+  /** Spark jobs that `body` submits from this thread, as seen by a listener.
+    * A tagged marker job after `body` flushes the listener bus: a listener
+    * gets its events in order, so once the marker arrives every job `body`
+    * started has been counted. */
+  private def jobsIn[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobTag"
+    val tag = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).foreach(t => seen.add(t))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val r = try body finally sc.setLocalProperty(key, null)
+      sc.setLocalProperty(key, tag + "-marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains(tag + "-marker") && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(seen.contains(tag + "-marker"), "the listener never saw the marker job")
+      (r, seen.toArray.count(_ == tag))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private val (ptLon, ptLat) = {
+    val b = Quadbin.cellBounds(Quadbin.tileToCell(35, 27, 6))
+    ((b(0) + b(2)) / 2, (b(1) + b(3)) / 2)
+  }
+
+  private val centerWkt = {
+    val (w, e) = (Quadbin.tileWest(33, 6) + 0.1, Quadbin.tileEast(36, 6) - 0.1)
+    val (s, n) = (Quadbin.tileSouth(28, 6) + 0.1, Quadbin.tileNorth(25, 6) - 0.1)
+    s"POLYGON(($w $s, $e $s, $e $n, $w $n, $w $s))"
+  }
+
+  private def tmpCopy(name: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory("rq-open").toString + "/" + name
+    val ds = RaquetIO.read(spark, fixture)
+    RaquetIO.write(ds.data, ds.meta, dir, maxRecordsPerFile = 16)
+    dir
+  }
+
+  test("reopening an unchanged path runs no Spark job (single-file and directory forms)") {
+    val dir = tmpCopy("hit")
+    for (path <- Seq(fixture, dir)) {
+      val cold = RaquetIO.readMetadata(spark, path)
+      val (ds, readJobs) = jobsIn(RaquetIO.read(spark, path))
+      val (_, atJobs) = jobsIn(RaquetIO.readAt(spark, path, ptLon, ptLat))
+      val (_, regionJobs) = jobsIn(RaquetIO.regionStatsTiles(spark, path, centerWkt, "band_1"))
+      assert((readJobs, atJobs, regionJobs) == ((0, 0, 0)), path)
+      // the cached open answers exactly what the cold one did
+      assert(RaquetMetadata.toJson(ds.meta) == RaquetMetadata.toJson(cold))
+      assert(ds.data.count() == 85)
+      assert(ds.data.filter(col("block") === 0L).count() == 0)
+    }
+  }
+
+  test("a cold open submits at most two Spark jobs; newSession() opens cold") {
+    val dir = tmpCopy("cold")
+    val (cold, coldJobs) = jobsIn(RaquetIO.read(spark, dir))
+    assert(coldJobs >= 1 && coldJobs <= 2, s"cold open ran $coldJobs jobs")
+    val other: SparkSession = spark.newSession()
+    val (again, otherJobs) = jobsIn(RaquetIO.read(other, dir))
+    assert(otherJobs >= 1 && otherJobs <= 2, s"a new session's first open ran $otherJobs jobs")
+    assert(jobsIn(RaquetIO.read(other, dir))._2 == 0)
+    assert(jobsIn(RaquetIO.read(spark, dir))._2 == 0)
+    assert(RaquetMetadata.toJson(again.meta) == RaquetMetadata.toJson(cold.meta))
+    assert(again.data.schema == cold.data.schema)
+    assert(again.data.count() == 85)
+  }
+
+  test("an overwrite with new metadata and a new stats column invalidates the open") {
+    val dir = tmpCopy("overwrite")
+    val before = RaquetIO.read(spark, dir)
+    assert(!before.data.columns.contains("band_1_p95"))
+    val src = RaquetIO.read(spark, fixture)
+    val meta2 = src.meta.copy(numBlocks = src.meta.numBlocks + 5)
+    RaquetIO.write(src.data.withColumn("band_1_p95", lit(2.5)), meta2, dir)
+    val after = RaquetIO.read(spark, dir)
+    assert(RaquetMetadata.toJson(after.meta) == RaquetMetadata.toJson(meta2))
+    assert(after.data.columns.contains("band_1_p95"))
+    assert(after.data.agg(min("band_1_p95"), max("band_1_p95")).head().toSeq == Seq(2.5, 2.5))
+    assert(RaquetIO.readAt(spark, dir, ptLon, ptLat).meta.numBlocks == meta2.numBlocks)
+  }
+
+  test("Maintenance.upsert invalidates the open: new tiles and refreshed metadata") {
+    val dir = tmpCopy("upsert")
+    val before = RaquetIO.read(spark, dir)
+    val cSrc = Quadbin.tileToCell(39, 31, 6)
+    val cNew = Quadbin.tileToCell(41, 26, 6)
+    assert(before.data.filter(col("block") === cNew).count() == 0)
+    val update = before.data.filter(col("block") === cSrc).withColumn("block", lit(cNew))
+    val rep = graft.raquet.Maintenance.upsert(spark, dir, update)
+    assert(rep.rowsInserted == 1)
+    val after = RaquetIO.read(spark, dir)
+    assert(after.meta.numBlocks == before.meta.numBlocks + 1)
+    assert(after.data.count() == 86)
+    assert(after.data.filter(col("block") === cNew).count() == 1)
+    assert(RaquetIO.readMetadata(spark, dir).numBlocks == before.meta.numBlocks + 1)
   }
 }
