@@ -31,69 +31,74 @@ object GraftFunctions {
   def quadbin_bounds(cell: Column): Column = col(QuadbinBounds(ex(cell)))
   def quadbin_is_valid(cell: Column): Column = col(QuadbinIsValid(ex(cell)))
 
-  // --- raster surface (kernel resolved at plan time from parsed metadata) ---
+  // --- raster surface (kernel resolved at plan time from parsed metadata;
+  // each function is one RqFns table entry — see RqFn for the contract) ---
+
+  private def call(fn: RqFn, args: Column*): Column = col(fn(args.map(ex): _*))
+  private def pair(meta: RaquetMetadata, nameA: String, nameB: String) =
+    BandPairKernel(BandKernel(meta, nameA), BandKernel(meta, nameB))
 
   def rq_decode(band: Column, meta: RaquetMetadata, name: String): Column =
-    col(RqDecode(ex(band), BandKernel(meta, name)))
+    rq_decode(band, BandKernel(meta, name))
   /** Kernel-direct decode for tiles created in-plan (e.g. rq_rasterize)
     * where no dataset metadata exists. */
   def rq_decode(band: Column, kernel: BandKernel): Column =
-    col(RqDecode(ex(band), kernel))
+    call(RqFns.decode(kernel), band)
   def rq_summary_stats(band: Column, meta: RaquetMetadata, name: String): Column =
-    col(RqSummaryStats(ex(band), BandKernel(meta, name)))
+    call(RqFns.summaryStats(BandKernel(meta, name)), band)
   def rq_raster_value(band: Column, block: Column, lon: Column, lat: Column,
       meta: RaquetMetadata, name: String): Column =
-    col(RqRasterValue(ex(band), ex(block), ex(lon), ex(lat), BandKernel(meta, name)))
+    call(RqFns.rasterValue(BandKernel(meta, name)), band, block, lon, lat)
   def rq_reclassify(band: Column, meta: RaquetMetadata, name: String,
       breaks: Array[Double], classes: Array[Double]): Column =
-    col(RqReclassify(ex(band), BandKernel(meta, name), breaks, classes))
+    call(RqFns.reclassify(BandKernel(meta, name), breaks, classes), band)
   def rq_composite(a: Column, b: Column, meta: RaquetMetadata,
       name: String): Column =
-    col(RqComposite(ex(a), ex(b), BandKernel(meta, name)))
+    call(RqFns.composite(BandKernel(meta, name)), a, b)
   def rq_translate(band: Column, meta: RaquetMetadata, name: String,
       outDtype: String, outNodata: Double, a: Double, b: Double): Column =
-    col(RqTranslate(ex(band), BandKernel(meta, name), outDtype, outNodata, a, b))
+    call(RqFns.translate(BandKernel(meta, name), outDtype, outNodata, a, b), band)
 
   def rq_brovey(pan: Column, mi: Column, mj: Column, meta: RaquetMetadata,
       panBand: String, miBand: String, mjBand: String): Column =
-    col(RqBrovey(ex(pan), ex(mi), ex(mj), BandKernel(meta, panBand),
-      BandKernel(meta, miBand), BandKernel(meta, mjBand)))
+    call(RqFns.brovey(BandKernel(meta, panBand), BandKernel(meta, miBand),
+      BandKernel(meta, mjBand)), pan, mi, mj)
 
   def rq_contour(band: Column, meta: RaquetMetadata, name: String,
       level: Double): Column =
-    col(RqContour(ex(band), BandKernel(meta, name), level))
+    call(RqFns.contour(BandKernel(meta, name), level), band)
   def rq_focal_contour(band: Column, halos: Column, meta: RaquetMetadata,
       name: String, level: Double): Column =
-    col(RqFocalContour(ex(band), ex(halos), BandKernel(meta, name), level))
+    call(RqFns.focalContour(BandKernel(meta, name), level), band, halos)
   def rq_rasterize(block: Column, zones: Column, kernel: BandKernel): Column =
-    col(RqRasterize(ex(block), ex(zones), kernel))
+    call(RqFns.rasterize(kernel), block, zones)
   def rq_idw_grid(block: Column, points: Column, kernel: BandKernel,
       radius: Long): Column =
-    col(RqIdwGrid(ex(block), ex(points), kernel, radius))
+    call(RqFns.idwGrid(kernel, radius), block, points)
   def rq_grid_stat(block: Column, points: Column, kernel: BandKernel,
       radius: Long, mode: Int): Column =
-    col(RqGridStat(ex(block), ex(points), kernel, radius, mode))
+    call(RqFns.gridStat(kernel, radius, mode), block, points)
   def rq_region_label(block: Column, band: Column, meta: RaquetMetadata,
       name: String): Column =
-    col(RqRegionLabel(ex(block), ex(band), BandKernel(meta, name)))
+    call(RqFns.regionLabel(BandKernel(meta, name)), block, band)
   def rq_region_strips(block: Column, band: Column, meta: RaquetMetadata,
       name: String): Column =
-    col(RqRegionStrips(ex(block), ex(band), BandKernel(meta, name)))
+    call(RqFns.regionStrips(BandKernel(meta, name)), block, band)
   def rq_region_sizes(block: Column, band: Column, meta: RaquetMetadata,
       name: String): Column =
-    col(RqRegionSizes(ex(block), ex(band), BandKernel(meta, name)))
+    call(RqFns.regionSizes(BandKernel(meta, name)), block, band)
   def rq_region_neighbors(block: Column, band: Column, meta: RaquetMetadata,
       name: String): Column =
-    col(RqRegionNeighbors(ex(block), ex(band), BandKernel(meta, name)))
+    call(RqFns.regionNeighbors(BandKernel(meta, name)), block, band)
   /** Per-tile label-blob remap through an O(1) hash table — see
-    * [[org.apache.spark.sql.graft.RqLabelRemap]]. */
+    * [[org.apache.spark.sql.graft.RqFns.labelRemap]]. */
   def rq_label_remap(lab: Column, kv: Column, kernel: BandKernel,
       asLong: Boolean): Column =
-    col(RqLabelRemap(ex(lab), ex(kv), kernel, asLong))
+    call(RqFns.labelRemap(kernel, asLong), lab, kv)
   /** Two-output label remap — see
-    * [[org.apache.spark.sql.graft.RqLabelRemap2]]. */
+    * [[org.apache.spark.sql.graft.RqFns.labelRemap2]]. */
   def rq_label_remap2(lab: Column, kv: Column, kernel: BandKernel): Column =
-    col(RqLabelRemap2(ex(lab), ex(kv), kernel))
+    call(RqFns.labelRemap2(kernel), lab, kv)
   /** One observer's full viewshed verdict set from its dense disk —
     * see [[org.apache.spark.sql.graft.RqViewshedDisk]]. */
   def rq_viewshed_disk(entries: Column, oh: Column, ox: Column, oy: Column,
@@ -101,109 +106,104 @@ object GraftFunctions {
     col(org.apache.spark.sql.graft.RqViewshedDisk(ex(entries), ex(oh),
       ex(ox), ex(oy), radius))
   /** Fused strips+frags(+nbrs/+label) from ONE decode + union-find per
-    * tile — see [[org.apache.spark.sql.graft.RqRegionAnalysis]]. */
+    * tile — see [[org.apache.spark.sql.graft.RqFns.regionAnalysis]]. */
   def rq_region_analysis(block: Column, band: Column, meta: RaquetMetadata,
       name: String, withNeighbors: Boolean = false,
       withLabel: Boolean = false): Column =
-    col(RqRegionAnalysis(ex(block), ex(band), BandKernel(meta, name),
-      withNeighbors, withLabel))
+    call(RqFns.regionAnalysis(BandKernel(meta, name), withNeighbors, withLabel),
+      block, band)
   def rq_region_segments(block: Column, band: Column, halos: Column,
       meta: RaquetMetadata, name: String): Column =
-    col(RqRegionSegments(ex(block), ex(band), ex(halos), BandKernel(meta, name)))
+    call(RqFns.regionSegments(BandKernel(meta, name)), block, band, halos)
   def rq_histogram(band: Column, meta: RaquetMetadata, name: String,
       min: Double, max: Double, buckets: Int): Column =
-    col(RqHistogram(ex(band), BandKernel(meta, name), min, max, buckets))
+    call(RqFns.histogram(BandKernel(meta, name), min, max, buckets), band)
   def rq_child_tile(band: Column, quadrant: Column, meta: RaquetMetadata,
       name: String): Column =
-    col(RqChildTile(ex(band), ex(quadrant), BandKernel(meta, name)))
+    call(RqFns.childTile(BandKernel(meta, name)), band, quadrant)
   def rq_clip_stats(band: Column, block: Column, meta: RaquetMetadata,
       name: String, wkt: String): Column =
-    col(RqClipStats(ex(band), ex(block), BandKernel(meta, name), wkt))
+    call(RqFns.clipStats(BandKernel(meta, name), wkt), band, block)
   def rq_normalized_difference(a: Column, b: Column, meta: RaquetMetadata,
       nameA: String, nameB: String): Column =
-    col(RqNormalizedDifference(ex(a), ex(b),
-      BandPairKernel(BandKernel(meta, nameA), BandKernel(meta, nameB))))
+    call(RqFns.normalizedDifference(pair(meta, nameA, nameB)), a, b)
   def rq_clip(band: Column, block: Column, meta: RaquetMetadata,
       name: String, wkt: String): Column =
-    col(RqClip(ex(band), ex(block), BandKernel(meta, name), wkt))
+    call(RqFns.clip(BandKernel(meta, name), wkt), band, block)
   def rq_focal_mean(band: Column, halos: Column, meta: RaquetMetadata,
       name: String): Column =
-    col(RqFocalMean(ex(band), ex(halos), BandKernel(meta, name)))
+    call(RqFns.focalMean(BandKernel(meta, name)), band, halos)
   def rq_fill_nodata(band: Column, halos: Column, meta: RaquetMetadata,
       name: String): Column =
-    col(RqFillNodata(ex(band), ex(halos), BandKernel(meta, name)))
+    call(RqFns.fillNodata(BandKernel(meta, name)), band, halos)
   def rq_chamfer_seed(band: Column, meta: RaquetMetadata, name: String,
       target: Double): Column =
-    col(RqChamferSeed(ex(band), BandKernel(meta, name), target))
+    call(RqFns.chamferSeed(BandKernel(meta, name), target), band)
   def rq_chamfer_relax(band: Column, halos: Column, meta: RaquetMetadata,
       name: String): Column =
-    col(RqChamferRelax(ex(band), ex(halos), BandKernel(meta, name)))
+    call(RqFns.chamferRelax(BandKernel(meta, name)), band, halos)
   def rq_focal_slope(band: Column, halos: Column, meta: RaquetMetadata,
       name: String, cell: Double, zt: Boolean = false): Column =
-    col(RqFocalSlope(ex(band), ex(halos), BandKernel(meta, name), cell, zt))
+    call(RqFns.focalSlope(BandKernel(meta, name), cell, zt), band, halos)
   def rq_focal_terrain(band: Column, halos: Column, meta: RaquetMetadata,
       name: String, cell: Double, azimuthDeg: Double,
       altitudeDeg: Double): Column =
-    col(RqFocalTerrain(ex(band), ex(halos), BandKernel(meta, name), cell,
-      azimuthDeg, altitudeDeg))
+    call(RqFns.focalTerrain(BandKernel(meta, name), cell, azimuthDeg, altitudeDeg),
+      band, halos)
   def rq_focal_hillshade_md(band: Column, halos: Column, meta: RaquetMetadata,
       name: String, cell: Double, altitudeDeg: Double): Column =
-    col(RqFocalHillshadeMd(ex(band), ex(halos), BandKernel(meta, name), cell,
-      altitudeDeg))
+    call(RqFns.focalHillshadeMd(BandKernel(meta, name), cell, altitudeDeg), band, halos)
   def rq_focal_tpi(band: Column, halos: Column, meta: RaquetMetadata,
       name: String): Column =
-    col(RqFocalTpi(ex(band), ex(halos), BandKernel(meta, name)))
+    call(RqFns.focalTpi(BandKernel(meta, name)), band, halos)
   def rq_color_relief(band: Column, meta: RaquetMetadata, name: String,
       breaks: Seq[Double], colors: Seq[(Int, Int, Int)]): Column =
-    col(RqColorRelief(ex(band), BandKernel(meta, name), breaks, colors))
+    call(RqFns.colorRelief(BandKernel(meta, name), breaks, colors), band)
   def rq_normalized_difference_stats(a: Column, b: Column, meta: RaquetMetadata,
       nameA: String, nameB: String): Column =
-    col(RqNdStats(ex(a), ex(b),
-      BandPairKernel(BandKernel(meta, nameA), BandKernel(meta, nameB))))
+    call(RqFns.ndStats(pair(meta, nameA, nameB)), a, b)
   def st_quadbin_intersects(block: Column, wkt: String): Column =
     col(QuadbinIntersects(ex(block), wkt))
   def st_contains(wkt: Column, lon: Column, lat: Column): Column =
-    col(StContains(ex(wkt), ex(lon), ex(lat)))
+    call(RqFns.contains, wkt, lon, lat)
   def rq_temporal_fit(series: Column, meta: RaquetMetadata,
       name: String): Column =
-    col(RqTemporalFit(ex(series), BandKernel(meta, name)))
+    call(RqFns.temporalFit(BandKernel(meta, name)), series)
   def rq_band_math(a: Column, b: Column, meta: RaquetMetadata,
       nameA: String, nameB: String, op: String): Column =
-    col(RqBandMath(ex(a), ex(b),
-      BandPairKernel(BandKernel(meta, nameA), BandKernel(meta, nameB)), op))
+    call(RqFns.bandMath(pair(meta, nameA, nameB), op), a, b)
   /** Kernel-pair form: map algebra across bands of DIFFERENT datasets /
     * dtypes (e.g. a source band vs a float64 derived composite). */
   def rq_band_math(a: Column, b: Column, kernelA: BandKernel,
       kernelB: BandKernel, op: String): Column =
-    col(RqBandMath(ex(a), ex(b), BandPairKernel(kernelA, kernelB), op))
+    call(RqFns.bandMath(BandPairKernel(kernelA, kernelB), op), a, b)
   def rq_band_math_stats(a: Column, b: Column, meta: RaquetMetadata,
       nameA: String, nameB: String, op: String): Column =
-    col(RqBandMathStats(ex(a), ex(b),
-      BandPairKernel(BandKernel(meta, nameA), BandKernel(meta, nameB)), op))
+    call(RqFns.bandMathStats(pair(meta, nameA, nameB), op), a, b)
   def quadbin_in_ranges(block: Column, ranges: Array[(Long, Long)]): Column =
     col(QuadbinInRanges(ex(block), ranges.map(_._1), ranges.map(_._2)))
   def st_polyfill(wkt: String, zoom: Column, mode: String = "intersects"): Column =
-    col(RqPolyfill(wkt, ex(zoom), mode))
+    call(RqFns.polyfill(wkt, mode), zoom)
   /** Polygon-table form: WKT as a column (zonal joins). */
   def st_polyfill_col(wkt: Column, zoom: Column,
       mode: String = "intersects"): Column =
-    col(RqPolyfillDyn(ex(wkt), ex(zoom), mode))
+    call(RqFns.polyfillCol(mode), wkt, zoom)
   /** Zonal form: WKT as a column. */
   def rq_clip_stats_col(band: Column, block: Column, wkt: Column,
       meta: RaquetMetadata, name: String): Column =
-    col(RqClipStatsDyn(ex(band), ex(block), ex(wkt), BandKernel(meta, name)))
+    call(RqFns.clipStatsCol(BandKernel(meta, name)), band, block, wkt)
   /** Zonal histogram form: per-(tile, zone) mergeable bucket counts. */
   def rq_clip_histogram_col(band: Column, block: Column, wkt: Column,
       meta: RaquetMetadata, name: String, min: Double, max: Double,
       buckets: Int): Column =
-    col(RqClipHistDyn(ex(band), ex(block), ex(wkt), BandKernel(meta, name),
-      min, max, buckets))
+    call(RqFns.clipHistogramCol(BandKernel(meta, name), min, max, buckets),
+      band, block, wkt)
   /** Multi-zone histogram form: one decode per tile for a zone LIST. */
   def rq_zonal_histograms(band: Column, block: Column, zones: Column,
       meta: RaquetMetadata, name: String, min: Double, max: Double,
       buckets: Int): Column =
-    col(RqZonalHists(ex(band), ex(block), ex(zones), BandKernel(meta, name),
-      min, max, buckets))
+    call(RqFns.zonalHistograms(BandKernel(meta, name), min, max, buckets),
+      band, block, zones)
 
   /** Exact partial→final stats merge (A3) over `rq_summary_stats` structs —
     * a declarative aggregate (codegen'd hash agg, primitive buffers). */
@@ -243,16 +243,16 @@ object GraftFunctions {
       .toAggregateExpression())
   def rq_mask_range(band: Column, kernel: BandKernel, lo: Double,
       hi: Double): Column =
-    col(RqMaskRange(ex(band), kernel, lo, hi))
+    call(RqFns.maskRange(kernel, lo, hi), band)
   def rq_mask_range(band: Column, meta: RaquetMetadata, name: String,
       lo: Double, hi: Double): Column =
     rq_mask_range(band, BandKernel(meta, name), lo, hi)
   /** Linear time-axis gap fill of a sorted (t, blob) stack. */
   def rq_temporal_fill(stack: Column, kernel: BandKernel): Column =
-    col(RqTemporalFill(ex(stack), kernel))
+    call(RqFns.temporalFill(kernel), stack)
   /** Theil–Sen slope + Mann–Kendall S/tau of a sorted (t, blob) stack. */
   def rq_theilsen_mk(stack: Column, kernel: BandKernel): Column =
-    col(RqTheilSenMk(ex(stack), kernel))
+    call(RqFns.theilSenMk(kernel), stack)
   /** Per-pixel OLS trend across a tile stack's time axis (group by
     * block): STRUCT(slope, intercept) of float64 gzip band blobs. */
   def rq_temporal_trend(band: Column, time: Column, kernel: BandKernel): Column =
@@ -367,141 +367,137 @@ object GraftFunctions {
       channel: Int): Column =
     col(MmWavFingerprint(ex(bin), frameLen, hop, channel))
 
-  /** Register all functions for use from `spark.sql`. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def r(name: String)(builder: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
-    r("quadbin_from_tile") { case Seq(x, y, z) => QuadbinFromTile(x, y, z) }
-    r("quadbin_zoom") { case Seq(c) => QuadbinZoom(c) }
-    r("quadbin_tile_x") { case Seq(c) => QuadbinTileX(c) }
-    r("quadbin_tile_y") { case Seq(c) => QuadbinTileY(c) }
-    r("quadbin_ancestor") { case Seq(c, p) => QuadbinAncestor(c, p) }
-    r("quadbin_from_lonlat") { case Seq(lon, lat, z) => QuadbinFromLonLat(lon, lat, z) }
-    r("quadbin_bounds") { case Seq(c) => QuadbinBounds(c) }
-    r("quadbin_is_valid") { case Seq(c) => QuadbinIsValid(c) }
-    // raster functions bind their kernel from foldable (metadata JSON, band)
-    // string args — parsed once at resolution, never per row
-    def litStr(e: Expression, what: String): String = e match {
-      case Literal(s, _) if s != null => s.toString
-      case other => throw new IllegalArgumentException(
-        s"$what must be a string literal, got $other")
-    }
-    def kernelOf(metaJson: Expression, band: Expression): BandKernel =
-      BandKernel(RaquetMetadata.parse(litStr(metaJson, "metadata")),
-        litStr(band, "band name"))
-    r("rq_decode") { case Seq(b, m, n) => RqDecode(b, kernelOf(m, n)) }
-    r("rq_summary_stats") { case Seq(b, m, n) => RqSummaryStats(b, kernelOf(m, n)) }
-    r("rq_raster_value") { case Seq(b, blk, lon, lat, m, n) =>
-      RqRasterValue(b, blk, lon, lat, kernelOf(m, n)) }
-    r("rq_clip_stats") { case Seq(b, blk, m, n, w) =>
-      RqClipStats(b, blk, kernelOf(m, n), litStr(w, "wkt")) }
-    r("rq_normalized_difference") { case Seq(a, b, m, na, nb) =>
-      RqNormalizedDifference(a, b, BandPairKernel(kernelOf(m, na), kernelOf(m, nb))) }
-    r("rq_clip") { case Seq(b, blk, m, n, w) =>
-      RqClip(b, blk, kernelOf(m, n), litStr(w, "wkt")) }
-    r("rq_normalized_difference_stats") { case Seq(a, b, m, na, nb) =>
-      RqNdStats(a, b, BandPairKernel(kernelOf(m, na), kernelOf(m, nb))) }
-    r("st_quadbin_intersects") { case Seq(c, w) =>
-      QuadbinIntersects(c, litStr(w, "wkt")) }
-    r("st_polyfill") { case Seq(w, z, m) =>
-      RqPolyfill(litStr(w, "wkt"), z, litStr(m, "mode")) }
-    r("rq_stats_merge") { case Seq(s) => RqStatsMerge(s) }
-    r("cf_to_timestamp") { case Seq(v, u, c) =>
-      CfToTimestamp(v, litStr(u, "units"), litStr(c, "calendar")) }
-    r("rq_inflate") { case Seq(b) => RqInflate(b) }
-    r("mm_image_stats") { case Seq(b) => MmImageStats(b) }
-    def litInt(e: Expression, what: String): Int = e match {
-      case Literal(v, _) if v != null => v.toString.toInt
-      case other => throw new IllegalArgumentException(
-        s"$what must be an integer literal, got $other")
-    }
-    r("mm_webp_encode") { case Seq(b, w, h, c) =>
-      MmWebpEncode(b, litInt(w, "width"), litInt(h, "height"), litInt(c, "channels")) }
-    r("mm_webp_pixels") { case Seq(b, c) =>
-      MmWebpPixels(b, litInt(c, "channels")) }
-    r("mm_webp_lossy") { case Seq(b, w, h, c, q) =>
-      MmWebpLossy(b, litInt(w, "width"), litInt(h, "height"),
-        litInt(c, "channels"), litInt(q, "quality")) }
-    r("st_area") { case Seq(w) => StArea(w) }
-    r("st_perimeter") { case Seq(w) => StPerimeter(w) }
-    r("st_centroid") { case Seq(w) => StCentroid(w) }
-    r("st_geom_from_wkb") { case Seq(b) => StGeomFromWkb(b) }
-    r("st_as_wkb") { case Seq(w) => StAsWkb(w) }
-    r("st_geom_from_geojson") { case Seq(s) => StGeomFromGeojson(s) }
-    r("st_as_geojson") { case Seq(w) => StAsGeojson(w) }
-    r("st_simplify") { case Seq(w, t) => StSimplify(w, litDouble(t, "tolerance")) }
-    r("st_npoints") { case Seq(w) => StNPoints(w) }
-    r("topk_sketch") { case Seq(i, cap, k) =>
-      TopKSketch(i, litInt(cap, "capacity"), litInt(k, "k")).toAggregateExpression() }
-    r("bloom_agg") { case Seq(h, bits, k) =>
-      BloomAgg(h, litInt(bits, "numBits"), litInt(k, "numHashes"))
-        .toAggregateExpression() }
-    r("bloom_might_contain") { case Seq(f, h) => BloomMightContain(f, h) }
-    r("rq_bpe_tokens") { case Seq(t, spec) => BpeTokens(t, litStr(spec, "merges")) }
-    r("rq_wordpiece_tokens") { case Seq(t, spec) =>
-      WordPieceTokens(t, litStr(spec, "vocab")) }
-    r("rq_temporal_composite") { case Seq(b, m, n, op) =>
-      RqTemporalComposite(b, kernelOf(m, n), litStr(op, "op"))
-        .toAggregateExpression() }
-    r("mm_u8_sum") { case Seq(b) => MmU8Sum(b) }
-    r("mm_u8_pack") { case Seq(a) => MmU8Pack(a) }
-    r("mm_exif_orientation") { case Seq(b) => MmExifOrientation(b) }
-    r("mm_orient") { case Seq(b, o, w, h, c) =>
-      MmOrient(b, o, litInt(w, "width"), litInt(h, "height"),
-        litInt(c, "channels")) }
-    r("mm_webp_anim") { case Seq(f, w, h, c, d) =>
-      MmWebpAnimEncode(f, litInt(w, "width"), litInt(h, "height"),
-        litInt(c, "channels"), litInt(d, "duration_ms")) }
-    r("mm_webp_anim_info") { case Seq(b) => MmWebpAnimInfo(b) }
-    r("mm_webp_frame") { case Seq(b, i, c) =>
-      MmWebpFramePixels(b, i, litInt(c, "channels")) }
-    r("mm_wav_encode") { case Seq(s, rate, ch, bits) =>
-      MmWavEncode(s, litInt(rate, "sample_rate"), litInt(ch, "channels"),
-        litInt(bits, "bits")) }
-    r("mm_wav_info") { case Seq(b) => MmWavInfo(b) }
-    r("mm_wav_stats") { case Seq(b, ch) => MmWavStats(b, litInt(ch, "channel")) }
-    r("mm_wav_resample") { case Seq(b, rate) =>
-      MmWavResample(b, litInt(rate, "target_rate")) }
-    r("mm_wav_frames") { case Seq(b, fl, hop, ch) =>
-      MmWavFrames(b, litInt(fl, "frame_len"), litInt(hop, "hop"),
-        litInt(ch, "channel")) }
-    r("mm_wav_trim") { case Seq(b, t) => MmWavTrim(b, litInt(t, "threshold")) }
-    r("mm_wav_fingerprint") { case Seq(b, fl, hop, ch) =>
-      MmWavFingerprint(b, litInt(fl, "frame_len"), litInt(hop, "hop"),
-        litInt(ch, "channel")) }
-    r("mm_dhash") { case Seq(b, w, h) =>
-      MmDhash(b, litInt(w, "width"), litInt(h, "height")) }
-    def litDouble(e: Expression, what: String): Double = e match {
-      case Literal(v, _) if v != null => v.toString.toDouble
-      case other => throw new IllegalArgumentException(
-        s"$what must be a numeric literal, got $other")
-    }
-    // numeric lists as CSV string literals ("64,128,192") — foldable,
-    // parsed once at resolution like the metadata JSON
-    def litDoubles(e: Expression, what: String): Array[Double] =
-      litStr(e, what).split(",").map(_.trim.toDouble)
-    r("rq_reclassify") { case Seq(b, m, n, br, cl) =>
-      RqReclassify(b, kernelOf(m, n),
-        litDoubles(br, "breaks"), litDoubles(cl, "classes")) }
-    r("rq_composite") { case Seq(a, b, m, n) =>
-      RqComposite(a, b, kernelOf(m, n)) }
-    r("rq_contour") { case Seq(b, m, n, lv) =>
-      RqContour(b, kernelOf(m, n), litDouble(lv, "level")) }
-    r("rq_histogram") { case Seq(b, m, n, lo, hi, k) =>
-      RqHistogram(b, kernelOf(m, n), litDouble(lo, "min"),
-        litDouble(hi, "max"), litInt(k, "buckets")) }
-    r("rq_rasterize") { case Seq(blk, zs, m, n) =>
-      RqRasterize(blk, zs, kernelOf(m, n)) }
-    r("st_contains") { case Seq(w, x, y) => StContains(w, x, y) }
-    r("rq_band_math") { case Seq(a, b, m, na, nb, op) =>
-      RqBandMath(a, b, BandPairKernel(kernelOf(m, na), kernelOf(m, nb)),
-        litStr(op, "op")) }
-    r("rq_band_math_stats") { case Seq(a, b, m, na, nb, op) =>
-      RqBandMathStats(a, b, BandPairKernel(kernelOf(m, na), kernelOf(m, nb)),
-        litStr(op, "op")) }
-    r("rq_clip_histogram") { case Seq(b, blk, w, m, n, lo, hi, k) =>
-      RqClipHistDyn(b, blk, w, kernelOf(m, n), litDouble(lo, "min"),
-        litDouble(hi, "max"), litInt(k, "buckets")) }
+  // --- SQL ---
+  // Raster functions bind their kernel from foldable (metadata JSON, band)
+  // string args, parsed once at resolution and never per row; numeric lists
+  // are CSV string literals ("64,128,192").
+
+  private def litStr(e: Expression, what: String): String = e match {
+    case Literal(v, _) if v != null => v.toString
+    case other => throw new IllegalArgumentException(s"$what must be a literal, got $other")
   }
+  private def litInt(e: Expression, what: String): Int = litStr(e, what).toInt
+  private def litDouble(e: Expression, what: String): Double = litStr(e, what).toDouble
+  private def litDoubles(e: Expression, what: String): Array[Double] =
+    litStr(e, what).split(",").map(_.trim.toDouble)
+  private def kernelOf(metaJson: Expression, band: Expression): BandKernel =
+    BandKernel(RaquetMetadata.parse(litStr(metaJson, "metadata")), litStr(band, "band name"))
+  private def pairOf(metaJson: Expression, a: Expression, b: Expression): BandPairKernel =
+    BandPairKernel(kernelOf(metaJson, a), kernelOf(metaJson, b))
+
+  /** Every SQL function by name: the one table both [[register]] and
+    * [[GraftExtensions]] install. A call with the wrong number of arguments
+    * fails with the function's name and the count it takes. */
+  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = {
+    def f(name: String, arity: Int)(build: Seq[Expression] => Expression) =
+      name -> { (args: Seq[Expression]) =>
+        if (args.length != arity) throw new IllegalArgumentException(
+          s"$name takes $arity arguments, got ${args.length}")
+        build(args)
+      }
+    Seq(
+      f("quadbin_from_tile", 3) { case Seq(x, y, z) => QuadbinFromTile(x, y, z) },
+      f("quadbin_zoom", 1) { case Seq(c) => QuadbinZoom(c) },
+      f("quadbin_tile_x", 1) { case Seq(c) => QuadbinTileX(c) },
+      f("quadbin_tile_y", 1) { case Seq(c) => QuadbinTileY(c) },
+      f("quadbin_ancestor", 2) { case Seq(c, p) => QuadbinAncestor(c, p) },
+      f("quadbin_from_lonlat", 3) { case Seq(lon, lat, z) => QuadbinFromLonLat(lon, lat, z) },
+      f("quadbin_bounds", 1) { case Seq(c) => QuadbinBounds(c) },
+      f("quadbin_is_valid", 1) { case Seq(c) => QuadbinIsValid(c) },
+      f("rq_decode", 3) { case Seq(b, m, n) => RqFns.decode(kernelOf(m, n))(b) },
+      f("rq_summary_stats", 3) { case Seq(b, m, n) => RqFns.summaryStats(kernelOf(m, n))(b) },
+      f("rq_raster_value", 6) { case Seq(b, blk, lon, lat, m, n) =>
+        RqFns.rasterValue(kernelOf(m, n))(b, blk, lon, lat) },
+      f("rq_clip_stats", 5) { case Seq(b, blk, m, n, w) =>
+        RqFns.clipStats(kernelOf(m, n), litStr(w, "wkt"))(b, blk) },
+      f("rq_clip", 5) { case Seq(b, blk, m, n, w) =>
+        RqFns.clip(kernelOf(m, n), litStr(w, "wkt"))(b, blk) },
+      f("rq_clip_histogram", 8) { case Seq(b, blk, w, m, n, lo, hi, k) =>
+        RqFns.clipHistogramCol(kernelOf(m, n), litDouble(lo, "min"), litDouble(hi, "max"),
+          litInt(k, "buckets"))(b, blk, w) },
+      f("rq_normalized_difference", 5) { case Seq(a, b, m, na, nb) =>
+        RqFns.normalizedDifference(pairOf(m, na, nb))(a, b) },
+      f("rq_normalized_difference_stats", 5) { case Seq(a, b, m, na, nb) =>
+        RqFns.ndStats(pairOf(m, na, nb))(a, b) },
+      f("rq_band_math", 6) { case Seq(a, b, m, na, nb, op) =>
+        RqFns.bandMath(pairOf(m, na, nb), litStr(op, "op"))(a, b) },
+      f("rq_band_math_stats", 6) { case Seq(a, b, m, na, nb, op) =>
+        RqFns.bandMathStats(pairOf(m, na, nb), litStr(op, "op"))(a, b) },
+      f("rq_reclassify", 5) { case Seq(b, m, n, br, cl) =>
+        RqFns.reclassify(kernelOf(m, n), litDoubles(br, "breaks"),
+          litDoubles(cl, "classes"))(b) },
+      f("rq_composite", 4) { case Seq(a, b, m, n) => RqFns.composite(kernelOf(m, n))(a, b) },
+      f("rq_contour", 4) { case Seq(b, m, n, lv) =>
+        RqFns.contour(kernelOf(m, n), litDouble(lv, "level"))(b) },
+      f("rq_histogram", 6) { case Seq(b, m, n, lo, hi, k) =>
+        RqFns.histogram(kernelOf(m, n), litDouble(lo, "min"), litDouble(hi, "max"),
+          litInt(k, "buckets"))(b) },
+      f("rq_rasterize", 4) { case Seq(blk, zs, m, n) => RqFns.rasterize(kernelOf(m, n))(blk, zs) },
+      f("rq_temporal_composite", 4) { case Seq(b, m, n, op) =>
+        RqTemporalComposite(b, kernelOf(m, n), litStr(op, "op")).toAggregateExpression() },
+      f("rq_stats_merge", 1) { case Seq(s) => RqStatsMerge(s) },
+      f("st_quadbin_intersects", 2) { case Seq(c, w) => QuadbinIntersects(c, litStr(w, "wkt")) },
+      f("st_polyfill", 3) { case Seq(w, z, m) =>
+        RqFns.polyfill(litStr(w, "wkt"), litStr(m, "mode"))(z) },
+      f("st_contains", 3) { case Seq(w, x, y) => RqFns.contains(w, x, y) },
+      f("cf_to_timestamp", 3) { case Seq(v, u, c) =>
+        CfToTimestamp(v, litStr(u, "units"), litStr(c, "calendar")) },
+      f("rq_inflate", 1) { case Seq(b) => RqInflate(b) },
+      f("st_area", 1) { case Seq(w) => StArea(w) },
+      f("st_perimeter", 1) { case Seq(w) => StPerimeter(w) },
+      f("st_centroid", 1) { case Seq(w) => StCentroid(w) },
+      f("st_geom_from_wkb", 1) { case Seq(b) => StGeomFromWkb(b) },
+      f("st_as_wkb", 1) { case Seq(w) => StAsWkb(w) },
+      f("st_geom_from_geojson", 1) { case Seq(s) => StGeomFromGeojson(s) },
+      f("st_as_geojson", 1) { case Seq(w) => StAsGeojson(w) },
+      f("st_simplify", 2) { case Seq(w, t) => StSimplify(w, litDouble(t, "tolerance")) },
+      f("st_npoints", 1) { case Seq(w) => StNPoints(w) },
+      f("topk_sketch", 3) { case Seq(i, cap, k) =>
+        TopKSketch(i, litInt(cap, "capacity"), litInt(k, "k")).toAggregateExpression() },
+      f("bloom_agg", 3) { case Seq(h, bits, k) =>
+        BloomAgg(h, litInt(bits, "numBits"), litInt(k, "numHashes")).toAggregateExpression() },
+      f("bloom_might_contain", 2) { case Seq(fl, h) => BloomMightContain(fl, h) },
+      f("rq_bpe_tokens", 2) { case Seq(t, spec) => BpeTokens(t, litStr(spec, "merges")) },
+      f("rq_wordpiece_tokens", 2) { case Seq(t, spec) =>
+        WordPieceTokens(t, litStr(spec, "vocab")) },
+      f("mm_image_stats", 1) { case Seq(b) => MmImageStats(b) },
+      f("mm_webp_encode", 4) { case Seq(b, w, h, c) =>
+        MmWebpEncode(b, litInt(w, "width"), litInt(h, "height"), litInt(c, "channels")) },
+      f("mm_webp_pixels", 2) { case Seq(b, c) => MmWebpPixels(b, litInt(c, "channels")) },
+      f("mm_webp_lossy", 5) { case Seq(b, w, h, c, q) =>
+        MmWebpLossy(b, litInt(w, "width"), litInt(h, "height"),
+          litInt(c, "channels"), litInt(q, "quality")) },
+      f("mm_u8_sum", 1) { case Seq(b) => MmU8Sum(b) },
+      f("mm_u8_pack", 1) { case Seq(a) => MmU8Pack(a) },
+      f("mm_exif_orientation", 1) { case Seq(b) => MmExifOrientation(b) },
+      f("mm_orient", 5) { case Seq(b, o, w, h, c) =>
+        MmOrient(b, o, litInt(w, "width"), litInt(h, "height"), litInt(c, "channels")) },
+      f("mm_webp_anim", 5) { case Seq(fr, w, h, c, d) =>
+        MmWebpAnimEncode(fr, litInt(w, "width"), litInt(h, "height"),
+          litInt(c, "channels"), litInt(d, "duration_ms")) },
+      f("mm_webp_anim_info", 1) { case Seq(b) => MmWebpAnimInfo(b) },
+      f("mm_webp_frame", 3) { case Seq(b, i, c) =>
+        MmWebpFramePixels(b, i, litInt(c, "channels")) },
+      f("mm_dhash", 3) { case Seq(b, w, h) => MmDhash(b, litInt(w, "width"), litInt(h, "height")) },
+      f("mm_wav_encode", 4) { case Seq(s, rate, ch, bits) =>
+        MmWavEncode(s, litInt(rate, "sample_rate"), litInt(ch, "channels"),
+          litInt(bits, "bits")) },
+      f("mm_wav_info", 1) { case Seq(b) => MmWavInfo(b) },
+      f("mm_wav_stats", 2) { case Seq(b, ch) => MmWavStats(b, litInt(ch, "channel")) },
+      f("mm_wav_resample", 2) { case Seq(b, rate) =>
+        MmWavResample(b, litInt(rate, "target_rate")) },
+      f("mm_wav_frames", 4) { case Seq(b, fl, hop, ch) =>
+        MmWavFrames(b, litInt(fl, "frame_len"), litInt(hop, "hop"), litInt(ch, "channel")) },
+      f("mm_wav_trim", 2) { case Seq(b, t) => MmWavTrim(b, litInt(t, "threshold")) },
+      f("mm_wav_fingerprint", 4) { case Seq(b, fl, hop, ch) =>
+        MmWavFingerprint(b, litInt(fl, "frame_len"), litInt(hop, "hop"),
+          litInt(ch, "channel")) })
+  }
+
+  /** Register every function of [[sqlFunctions]] for use from `spark.sql`
+    * in this session. Idempotent. */
+  def register(spark: SparkSession): Unit =
+    sqlFunctions.foreach { case (name, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
 }

@@ -18,8 +18,8 @@ import graft.raquet.RaquetMetadata
   * shuffle carries the compressed blobs once plus the tiny strips — never
   * 9× the raster, never a decoded-pixel shuffle of tile interiors. The
   * per-tile window computations are plan-time kernel expressions
-  * ([[org.apache.spark.sql.graft.RqFocalMean]],
-  * [[org.apache.spark.sql.graft.RqFocalSlope]]).
+  * ([[org.apache.spark.sql.graft.RqFns.focalMean]],
+  * [[org.apache.spark.sql.graft.RqFns.focalSlope]]).
   */
 object Focal {
 

@@ -14,7 +14,7 @@ import graft.raquet.RaquetIO.RaquetDataset
   * sides are Morton-sorted on disk so the shuffle is the co-partitioning a
   * 100 TB mosaic needs anyway, and every pixel kernel runs post-join, fully
   * parallel. Tiles covered by only ONE input pass their blobs through
-  * byte-identical ([[org.apache.spark.sql.graft.RqComposite]] short-circuits
+  * byte-identical ([[org.apache.spark.sql.graft.RqFns.composite]] short-circuits
   * the null side), so decode cost is paid only where coverage overlaps —
   * for continental mosaics the overlap seam is a vanishing fraction of
   * tiles.

@@ -385,7 +385,7 @@ final case class BandKernel(
   /** Union-find roots per pixel for 4-connected equal-value components;
     * -1 for invalid pixels. Roots are row-major-min by construction
     * (smaller root wins every union). Public: the polygonize segment
-    * kernel ([[org.apache.spark.sql.graft.RqRegionSegments]]) labels its
+    * kernel ([[org.apache.spark.sql.graft.RqBridge.regionSegmentsOf]]) labels its
     * boundary segments with the same roots. */
   def regionRoots(v: Array[Double]): Array[Int] = {
     val n = width * height

@@ -4,7 +4,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -12,13 +12,13 @@ import org.apache.spark.sql.types._
 import graft.geo.{Geom, Wkt}
 import graft.raquet.{BandKernel, BandPairKernel}
 
-/** Catalyst expressions for the raster function surface (SURVEY.md §2.8
+/** Kernel entry points of the raster function surface (SURVEY.md §2.8
   * F10-F14, §2.4 A1): decode, per-tile summary stats, point value, clip
-  * stats, normalized difference. The resolved [[BandKernel]] (dtype, nodata,
-  * tile size, scale/offset from the dataset's metadata) is a constructor
-  * parameter — bound once at plan time, carried into generated code via
-  * `addReferenceObj`, so the per-row work is a single static-shaped call into
-  * primitive-array loops. Reference semantics: `docs/engines.md:44-61`,
+  * stats, normalized difference, focal and region kernels. The resolved
+  * [[BandKernel]] (dtype, nodata, tile size, scale/offset from the dataset's
+  * metadata) is a plan-time constant of each function's [[RqFn]] (table:
+  * [[RqFns]]), carried into generated code by [[RqCall]], so the per-row
+  * work is a single call into primitive-array loops. Reference semantics: `docs/engines.md:44-61`,
   * `raquet/raster2raquet.py:525-574`, `format-specs/raquet.md:306-345`.
   */
 object RqBridge {
@@ -187,7 +187,7 @@ object RqBridge {
     * exact (dyadic/integer) pixel values agree bit-for-bit regardless of
     * accumulation order. Output is a FIRST-CLASS float64 band blob (gzip,
     * scale 1 / offset 0, NaN where the whole window is invalid) — the
-    * RqReclassify/RqComposite shape — so focal output feeds every
+    * rq_reclassify/rq_composite shape — so focal output feeds every
     * downstream blob kernel and the writer without re-encoding, and no
     * 65k-element array ever materializes in the row. */
   def focalOf(k: BandKernel, raw: Array[Byte], halos: ArrayData): Array[Byte] = {
@@ -1038,1508 +1038,516 @@ object RqBridge {
   val B = "org.apache.spark.sql.graft.RqBridge"
 }
 
-/** rq_decode(band) → ARRAY<DOUBLE> raw DN values (F10 + F7 gzip sniffing). */
-case class RqDecode(child: Expression, kernel: BandKernel)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_decode"
-  override protected def nullSafeEval(raw: Any): Any =
-    RqBridge.decodeOf(kernel, raw.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, c => s"${RqBridge.B}.decodeOf($k, $c)")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+/** A raster function as a plan-time value: its SQL name, argument and
+  * result types, null contract, and the one kernel call it makes.
+  *
+  * Equality — and so Catalyst's semantic equality and common-subexpression
+  * elimination — covers the first parameter list only, so `consts` holds
+  * every plan-time value `call` uses (kernel, geometry, levels, …): two
+  * calls that differ only in a constant never merge.
+  *
+  * Null contract: a NULL argument whose index is not in `optional` makes
+  * the result NULL without a call; an optional one reaches `call` as null.
+  * `nullResult` means the call itself may answer NULL (an empty tile, a
+  * miss, a nodata pixel). */
+case class RqFn(name: String, consts: Seq[Any])(
+    val inputTypes: Seq[AbstractDataType],
+    val dataType: DataType,
+    val optional: Set[Int] = Set.empty,
+    val nullResult: Boolean = false)(
+    val call: Array[Any] => Any) {
+  def apply(args: Expression*): Expression = RqCall(args, this)
 }
 
-/** rq_reclassify(band) with plan-time `breaks`/`classes` → new band blob of
-  * the same dtype/nodata (gzip) with each valid pixel's physical value
-  * mapped to its bin's class (ST_Reclass shape; left-closed bins, binary
-  * search). The output composes with every blob kernel downstream. */
-case class RqReclassify(child: Expression, kernel: BandKernel,
-    breaks: Array[Double], classes: Array[Double])
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_reclassify"
-  override protected def nullSafeEval(raw: Any): Any =
-    kernel.reclassify(raw.asInstanceOf[Array[Byte]], breaks, classes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = ctx.addReferenceObj("breaks", breaks, "double[]")
-    val c = ctx.addReferenceObj("classes", classes, "double[]")
-    defineCodeGen(ctx, ev, raw => s"$k.reclassify($raw, $b, $c)")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
+/** The one Catalyst expression behind every raster function: evaluates its
+  * children and hands them to `fn` under `fn`'s null contract. Generated
+  * code reaches `fn` through `addReferenceObj`, so every function stays in
+  * whole-stage codegen. Constants are not children, so the auto-generated
+  * column name is `fn.name(children)`, as for a built-in. */
+case class RqCall(children: Seq[Expression], fn: RqFn)
+    extends Expression with ImplicitCastInputTypes {
+  override def inputTypes: Seq[AbstractDataType] = fn.inputTypes
+  override def dataType: DataType = fn.dataType
+  override def prettyName: String = fn.name
+  override def nullIntolerant: Boolean = fn.optional.isEmpty
+  override def nullable: Boolean = fn.nullResult ||
+    children.indices.exists(i => !fn.optional(i) && children(i).nullable)
+  override protected def stringArgs: Iterator[Any] = children.iterator ++ fn.consts.iterator
 
-/** rq_translate(band) — gdal_translate's -scale/-ot as a codegen'd kernel:
-  * linear DN rescale a·v + b re-encoded to `outDtype` (half-even rint +
-  * range clamp for integer outputs), nodata → `outNodata`. No shuffle. */
-case class RqTranslate(child: Expression, kernel: BandKernel,
-    outDtype: String, outNodata: Double, a: Double, b: Double)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_translate"
-  override protected def nullSafeEval(raw: Any): Any =
-    kernel.translate(raw.asInstanceOf[Array[Byte]], outDtype, outNodata, a, b)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val nd = if (outNodata.isNaN) "Double.NaN" else s"${outNodata}D"
-    defineCodeGen(ctx, ev, raw =>
-      s"""$k.translate($raw, "$outDtype", $nd, ${a}D, ${b}D)""")
+  override def eval(input: InternalRow): Any = {
+    val args = new Array[Any](children.length)
+    var i = 0
+    while (i < args.length) {
+      args(i) = children(i).eval(input)
+      if (args(i) == null && !fn.optional(i)) return null
+      i += 1
+    }
+    fn.call(args)
   }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
 
-/** rq_brovey(pan, mi, mj) — gdal_pansharpen's Brovey ratio for band i:
-  * M_i · P / ((M_i + M_j)/2) over physical values, NaN on any invalid
-  * input; float64 gzip blob out ([[graft.raquet.Pansharpen.brovey]]). */
-case class RqBrovey(pan: Expression, mi: Expression, mj: Expression,
-    kp: BandKernel, ki: BandKernel, kj: BandKernel)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def first: Expression = pan
-  override def second: Expression = mi
-  override def third: Expression = mj
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(BinaryType, BinaryType, BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_brovey"
-  override protected def nullSafeEval(p: Any, a: Any, b: Any): Any =
-    graft.raquet.Pansharpen.brovey(kp, ki, kj, p.asInstanceOf[Array[Byte]],
-      a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val p = ctx.addReferenceObj("kp", kp, classOf[BandKernel].getName)
-    val i = ctx.addReferenceObj("ki", ki, classOf[BandKernel].getName)
-    val j = ctx.addReferenceObj("kj", kj, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (pn, a, b) =>
-      s"graft.raquet.Pansharpen.brovey($p, $i, $j, $pn, $a, $b)")
+    val f = ctx.addReferenceObj("fn", fn, classOf[RqFn].getName)
+    val evs = children.map(_.genCode(ctx))
+    val args = ctx.freshName("args")
+    val r = ctx.freshName("r")
+    val fill = children.indices.map { i =>
+      val dt = children(i).dataType
+      val v =
+        if (CodeGenerator.isPrimitiveType(dt)) s"${CodeGenerator.boxedType(dt)}.valueOf(${evs(i).value})"
+        else s"${evs(i).value}"
+      s"$args[$i] = ${evs(i).isNull} ? null : $v;"
+    }.mkString("\n")
+    val guard = (children.indices.filterNot(fn.optional).map(i => s"!${evs(i).isNull}") :+ "true")
+      .mkString(" && ")
+    ev.copy(code =
+      code"""
+        ${Block.blocksToBlock(evs.map(_.code))}
+        boolean ${ev.isNull} = true;
+        ${CodeGenerator.javaType(dataType)} ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+        if ($guard) {
+          Object[] $args = new Object[${children.length}];
+          $fill
+          Object $r = $f.call().apply($args);
+          if ($r != null) {
+            ${ev.isNull} = false;
+            ${ev.value} = (${CodeGenerator.boxedType(dataType)}) $r;
+          }
+        }
+      """)
   }
+
   override protected def withNewChildrenInternal(
-      p: Expression, a: Expression, b: Expression): Expression =
-    copy(pan = p, mi = a, mj = b)
+      newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
 }
 
-/** rq_contour(band) with a plan-time `level` → ARRAY<ARRAY<DOUBLE>> of
-  * [x1,y1,x2,y2] marching-squares segments in fractional pixel
-  * coordinates (the gdal_contour shape; see [[BandKernel.contour]]). */
-case class RqContour(child: Expression, kernel: BandKernel, level: Double)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType =
-    ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_contour"
-  override protected def nullSafeEval(raw: Any): Any =
-    RqBridge.contourOf(kernel, raw.asInstanceOf[Array[Byte]], level)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, c => s"${RqBridge.B}.contourOf($k, $c, ${level}D)")
+/** The raster function table: one [[RqFn]] factory per function, taking its
+  * plan-time constants. The `GraftFunctions` Column API and SQL builders
+  * both build their expressions from here. */
+object RqFns {
+  private def bin(a: Any): Array[Byte] = a.asInstanceOf[Array[Byte]]
+  private def arr(a: Any): ArrayData = a.asInstanceOf[ArrayData]
+  private def long(a: Any): Long = a.asInstanceOf[Long]
+  private def dbl(a: Any): Double = a.asInstanceOf[Double]
+
+  private def structs(fields: (String, DataType)*): ArrayType =
+    ArrayType(StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) }),
+      containsNull = false)
+  private val Doubles = ArrayType(DoubleType, containsNull = false)
+  private val Longs = ArrayType(LongType, containsNull = false)
+  private val Segments = ArrayType(Doubles, containsNull = false)
+  /** Focal halo strips (dx, dy, vals): see [[RqBridge.focalOf]]. */
+  private val Halos = ArrayType(StructType(Seq(
+    StructField("dx", IntegerType),
+    StructField("dy", IntegerType),
+    StructField("vals", ArrayType(DoubleType, containsNull = true)))), containsNull = true)
+  private val Points = structs("pid" -> LongType, "px" -> LongType, "py" -> LongType,
+    "v" -> DoubleType)
+  private def stack(x: String) = structs(x -> DoubleType, "b" -> BinaryType)
+  private val Strips = structs("dir" -> IntegerType, "idx" -> IntegerType, "lab" -> LongType,
+    "v" -> DoubleType)
+  private val Frags = structs("lab" -> LongType, "n" -> LongType, "v" -> DoubleType,
+    "gx0" -> LongType, "gy0" -> LongType, "gx1" -> LongType, "gy1" -> LongType)
+  private val Nbrs = structs("la" -> LongType, "lb" -> LongType)
+
+  /** rq_decode(band) → ARRAY<DOUBLE> raw DN values (F10 + F7 gzip sniffing). */
+  def decode(k: BandKernel): RqFn =
+    RqFn("rq_decode", Seq(k))(Seq(BinaryType), Doubles)(a => RqBridge.decodeOf(k, bin(a(0))))
+
+  /** rq_reclassify(band) with plan-time `breaks`/`classes` → new band blob of
+    * the same dtype/nodata (gzip) with each valid pixel's physical value
+    * mapped to its bin's class (ST_Reclass shape; left-closed bins, binary
+    * search). The output composes with every blob kernel downstream. */
+  def reclassify(k: BandKernel, breaks: Array[Double], classes: Array[Double]): RqFn =
+    RqFn("rq_reclassify", Seq(k, breaks.toSeq, classes.toSeq))(Seq(BinaryType), BinaryType)(
+      a => k.reclassify(bin(a(0)), breaks, classes))
+
+  /** rq_translate(band) — gdal_translate's -scale/-ot as a codegen'd kernel:
+    * linear DN rescale a·v + b re-encoded to `outDtype` (half-even rint +
+    * range clamp for integer outputs), nodata → `outNodata`. No shuffle. */
+  def translate(k: BandKernel, outDtype: String, outNodata: Double, sa: Double,
+      sb: Double): RqFn =
+    RqFn("rq_translate", Seq(k, outDtype, outNodata, sa, sb))(Seq(BinaryType), BinaryType)(
+      a => k.translate(bin(a(0)), outDtype, outNodata, sa, sb))
+
+  /** rq_brovey(pan, mi, mj) — gdal_pansharpen's Brovey ratio for band i:
+    * M_i · P / ((M_i + M_j)/2) over physical values, NaN on any invalid
+    * input; float64 gzip blob out ([[graft.raquet.Pansharpen.brovey]]). */
+  def brovey(kp: BandKernel, ki: BandKernel, kj: BandKernel): RqFn =
+    RqFn("rq_brovey", Seq(kp, ki, kj))(Seq(BinaryType, BinaryType, BinaryType), BinaryType)(
+      a => graft.raquet.Pansharpen.brovey(kp, ki, kj, bin(a(0)), bin(a(1)), bin(a(2))))
+
+  /** rq_contour(band) with a plan-time `level` → ARRAY<ARRAY<DOUBLE>> of
+    * [x1,y1,x2,y2] marching-squares segments in fractional pixel
+    * coordinates (the gdal_contour shape; see [[BandKernel.contour]]). */
+  def contour(k: BandKernel, level: Double): RqFn =
+    RqFn("rq_contour", Seq(k, level))(Seq(BinaryType), Segments)(
+      a => RqBridge.contourOf(k, bin(a(0)), level))
+
+  /** rq_focal_contour(band, halos) with a plan-time `level` → contour
+    * segments INCLUDING cross-tile cells (halo contract of [[focalMean]];
+    * see [[RqBridge.contourHaloOf]] for ownership). */
+  def focalContour(k: BandKernel, level: Double): RqFn =
+    RqFn("rq_focal_contour", Seq(k, level))(Seq(BinaryType, Halos), Segments, optional = Set(1))(
+      a => RqBridge.contourHaloOf(k, bin(a(0)), arr(a(1)), level))
+
+  /** rq_rasterize(block, zones) → band blob with each zone's value burned
+    * onto pixels whose center falls inside its geometry (max value wins on
+    * overlap, untouched pixels = nodata). `zones` is the per-tile
+    * ARRAY<STRUCT<value DOUBLE, wkt STRING>> a polyfill join + collect_list
+    * produces — the vector→raster half of the engine (gdal_rasterize shape,
+    * inverse of rq_clip). */
+  def rasterize(k: BandKernel): RqFn =
+    RqFn("rq_rasterize", Seq(k))(
+      Seq(LongType, structs("value" -> DoubleType, "wkt" -> StringType)), BinaryType)(
+      a => RqBridge.rasterizeOf(k, long(a(0)), arr(a(1))))
+
+  /** rq_region_label(block, band) → float64 blob of per-tile 4-connected
+    * equal-value component labels (global-pixel-id of each component's min
+    * pixel; see [[graft.raquet.BandKernel.regionLabel]]). */
+  def regionLabel(k: BandKernel): RqFn =
+    RqFn("rq_region_label", Seq(k))(Seq(LongType, BinaryType), BinaryType)(
+      a => RqBridge.regionLabelOf(k, long(a(0)), bin(a(1))))
+
+  /** rq_region_sizes(block, band) → ARRAY<STRUCT<lab, n, …>> per-tile
+    * fragment size table (see [[graft.raquet.BandKernel.regionSizes]]) —
+    * the pixel-volume-free path for global region sizes. */
+  def regionSizes(k: BandKernel): RqFn =
+    RqFn("rq_region_sizes", Seq(k))(Seq(LongType, BinaryType), Frags)(
+      a => RqBridge.regionSizesOf(k, long(a(0)), bin(a(1))))
+
+  /** rq_region_neighbors(block, band) → ARRAY<STRUCT<la, lb>> of distinct
+    * within-tile adjacent fragment pairs with DIFFERENT values (see
+    * [[graft.raquet.BandKernel.regionNeighbors]]) — the cross-value
+    * neighbor graph the sieve APPLY step merges along. */
+  def regionNeighbors(k: BandKernel): RqFn =
+    RqFn("rq_region_neighbors", Seq(k))(Seq(LongType, BinaryType), Nbrs)(
+      a => RqBridge.regionNeighborsOf(k, long(a(0)), bin(a(1))))
+
+  /** rq_region_strips(block, band) → ARRAY<STRUCT<dir, idx, lab, v>> of the
+    * tile's valid boundary pixels with their fragment labels (see
+    * [[graft.raquet.BandKernel.regionStrips]]); the cross-tile label-merge
+    * edges come from equi-joining opposing strips. */
+  def regionStrips(k: BandKernel): RqFn =
+    RqFn("rq_region_strips", Seq(k))(Seq(LongType, BinaryType), Strips)(
+      a => RqBridge.regionStripsOf(k, long(a(0)), bin(a(1))))
+
+  /** rq_region_analysis(block, band) → STRUCT<strips, frags, nbrs, lab> —
+    * the fused one-decode one-union-find evaluation of rq_region_strips +
+    * rq_region_sizes (+ optionally rq_region_neighbors / rq_region_label;
+    * those fields are NULL when not requested). Each field is bit-identical
+    * to its standalone kernel's output; [[graft.operators.Regions]]
+    * checkpoints ONE such struct per tile instead of re-decoding the band
+    * blob per consumer. */
+  def regionAnalysis(k: BandKernel, withNeighbors: Boolean, withLabel: Boolean): RqFn =
+    RqFn("rq_region_analysis", Seq(k, withNeighbors, withLabel))(
+      Seq(LongType, BinaryType),
+      StructType(Seq(
+        StructField("strips", Strips, nullable = false),
+        StructField("frags", Frags, nullable = false),
+        StructField("nbrs", Nbrs, nullable = true),
+        StructField("lab", BinaryType, nullable = true))))(
+      a => RqBridge.regionAnalysisOf(k, long(a(0)), bin(a(1)), withNeighbors, withLabel))
+
+  /** rq_label_remap(lab, kv) → ARRAY<STRUCT<pos, v>> — per-tile label-blob
+    * remap through an O(1) hash table (see [[RqBridge.labelRemapOf]]);
+    * `asLong` picks BIGINT output (exact for labels < 2^53), else DOUBLE. */
+  def labelRemap(k: BandKernel, asLong: Boolean): RqFn =
+    RqFn("rq_label_remap", Seq(k, asLong))(
+      Seq(BinaryType, ArrayType(StructType(Seq(
+        StructField("l", LongType),
+        StructField("o", DoubleType))), containsNull = false)),
+      ArrayType(StructType(Seq(
+        StructField("pos", IntegerType, nullable = false),
+        StructField("v", if (asLong) LongType else DoubleType, nullable = true))),
+        containsNull = false))(
+      a => RqBridge.labelRemapOf(k, bin(a(0)), arr(a(1)), asLong))
+
+  /** rq_label_remap2(lab, kv) → ARRAY<STRUCT<pos, v, v2>> — the two-output
+    * label remap (see [[RqBridge.labelRemap2Of]]): one decode + one probe
+    * per pixel resolves two per-region attributes at once, both emitted as
+    * exact longs. */
+  def labelRemap2(k: BandKernel): RqFn =
+    RqFn("rq_label_remap2", Seq(k))(
+      Seq(BinaryType, ArrayType(StructType(Seq(
+        StructField("l", LongType),
+        StructField("o", DoubleType),
+        StructField("o2", DoubleType))), containsNull = false)),
+      ArrayType(StructType(Seq(
+        StructField("pos", IntegerType, nullable = false),
+        StructField("v", LongType, nullable = true),
+        StructField("v2", LongType, nullable = true))), containsNull = false))(
+      a => RqBridge.labelRemap2Of(k, bin(a(0)), arr(a(1))))
+
+  /** rq_region_segments(block, band, halos) → boundary segments + successor
+    * links for polygonize (see [[RqBridge.regionSegmentsOf]]). Halos use the
+    * focal-exchange layout and may be NULL (isolated tile). */
+  def regionSegments(k: BandKernel): RqFn =
+    RqFn("rq_region_segments", Seq(k))(
+      Seq(LongType, BinaryType, Halos),
+      structs("x" -> LongType, "y" -> LongType, "dir" -> IntegerType, "sx" -> LongType,
+        "sy" -> LongType, "sdir" -> IntegerType, "lab" -> LongType),
+      optional = Set(2))(
+      a => RqBridge.regionSegmentsOf(k, long(a(0)), bin(a(1)), arr(a(2))))
+
+  /** rq_idw_grid(block, points) → float64 blob: gdal_grid invdist:power=2
+    * over global pixel coordinates (see [[graft.raquet.BandKernel.idwGrid]]).
+    * Points must arrive sorted by their id field — the accumulation chain
+    * is array-order-deterministic so the oracle replays it bit-for-bit. */
+  def idwGrid(k: BandKernel, radius: Long): RqFn =
+    RqFn("rq_idw_grid", Seq(k, radius))(Seq(LongType, Points), BinaryType)(
+      a => RqBridge.idwGridOf(k, long(a(0)), arr(a(1)), radius))
+
+  /** rq_mask_range(band) → float64 blob: v ∈ [lo, hi) → NaN, nodata → NaN,
+    * else pass-through (see [[graft.raquet.BandKernel.maskRange]]). */
+  def maskRange(k: BandKernel, lo: Double, hi: Double): RqFn =
+    RqFn("rq_mask_range", Seq(k, lo, hi))(Seq(BinaryType), BinaryType)(
+      a => k.maskRange(bin(a(0)), lo, hi))
+
+  /** rq_temporal_fill(stack) — linear time-axis gap fill of one block's
+    * sorted (t, blob) stack (see [[graft.raquet.BandKernel.temporalFill]]);
+    * returns (t, float64 blob) pairs in the same order. */
+  def temporalFill(k: BandKernel): RqFn =
+    RqFn("rq_temporal_fill", Seq(k))(Seq(stack("t")),
+      structs("t" -> DoubleType, "vals" -> BinaryType))(
+      a => RqBridge.temporalFillOf(k, arr(a(0))))
+
+  /** rq_theilsen_mk(stack) — Theil–Sen median slope + Mann–Kendall S/tau
+    * along one block's sorted (t, blob) stack (see
+    * [[graft.raquet.BandKernel.theilSenMk]]). */
+  def theilSenMk(k: BandKernel): RqFn =
+    RqFn("rq_theilsen_mk", Seq(k))(Seq(stack("t")), StructType(Seq(
+      StructField("slope", BinaryType, nullable = false),
+      StructField("mk_s", BinaryType, nullable = false),
+      StructField("tau", BinaryType, nullable = false))))(
+      a => RqBridge.theilSenMkOf(k, arr(a(0))))
+
+  /** rq_grid_stat(block, points) → float64 blob: the gdal_grid
+    * average / nearest / count algorithms (see
+    * [[graft.raquet.BandKernel.gridStat]]). Points must arrive sorted by
+    * their id field — the average chain is array-order-deterministic and
+    * nearest ties resolve to the first (= lowest-id) point. */
+  def gridStat(k: BandKernel, radius: Long, mode: Int): RqFn =
+    RqFn("rq_grid_stat", Seq(k, radius, mode))(Seq(LongType, Points), BinaryType)(
+      a => RqBridge.gridStatOf(k, long(a(0)), arr(a(1)), radius, mode))
+
+  /** rq_histogram(band) with plan-time [min, max) × buckets → ARRAY<BIGINT>
+    * per-tile bucket counts (GDAL convention). Element-wise sums across
+    * tiles give exact dataset-level distributions/percentiles without a
+    * global sort — the mergeable-sketch shape, exact for bounded DN ranges. */
+  def histogram(k: BandKernel, min: Double, max: Double, buckets: Int): RqFn =
+    RqFn("rq_histogram", Seq(k, min, max, buckets))(Seq(BinaryType), Longs)(
+      a => ArrayData.toArrayData(k.histogram(bin(a(0)), min, max, buckets)))
+
+  /** rq_child_tile(band, quadrant) → the ×2-upsampled child blob for
+    * quadrant 0..3 (Morton order) — zoom refinement, the inverse of the
+    * pyramid's 2×2-average reduce. Composes with quadbin_from_tile bit math
+    * for the child cell ids; see [[graft.raquet.Pyramid.upsampleLevel]]. */
+  def childTile(k: BandKernel): RqFn =
+    RqFn("rq_child_tile", Seq(k))(Seq(BinaryType, IntegerType), BinaryType)(
+      a => k.childTile(bin(a(0)), a(1).asInstanceOf[Int]))
+
+  /** rq_composite(a, b) → first-valid-wins per-pixel mosaic blob. NULL
+    * handling is the mosaic's outer-join semantics: a missing side passes the
+    * other side's blob through BYTE-IDENTICAL (no decode/re-encode), so
+    * single-source regions of a mosaic cost nothing per tile. */
+  def composite(k: BandKernel): RqFn =
+    RqFn("rq_composite", Seq(k))(Seq(BinaryType, BinaryType), BinaryType,
+      optional = Set(0, 1), nullResult = true)(
+      a => if (a(0) == null) a(1) else if (a(1) == null) a(0) else k.composite(bin(a(0)), bin(a(1))))
+
+  /** rq_summary_stats(band) → stats struct over valid pixels (A1); null for
+    * empty tiles. The partial-merge fields (count/sum/sum_sq) make the output
+    * directly mergeable by [[graft.operators.StatsMerge]] (A3). */
+  def summaryStats(k: BandKernel): RqFn =
+    RqFn("rq_summary_stats", Seq(k))(Seq(BinaryType), RqBridge.statsSchema, nullResult = true)(
+      a => RqBridge.statsOf(k, bin(a(0))))
+
+  /** rq_raster_value(band, block, lon, lat) → physical value at a point (F12);
+    * NULL outside the tile / at nodata pixels. */
+  def rasterValue(k: BandKernel): RqFn =
+    RqFn("rq_raster_value", Seq(k))(Seq(BinaryType, LongType, DoubleType, DoubleType),
+      DoubleType, nullResult = true) { a =>
+      val v = k.valueAt(bin(a(0)), long(a(1)), dbl(a(2)), dbl(a(3)))
+      if (java.lang.Double.isNaN(v)) null else v
+    }
+
+  /** rq_clip_stats(band, block) with a plan-time geometry → stats struct over
+    * valid pixels whose center is inside the geometry (F13+A1, the per-tile
+    * half of ST_RegionStats); null when the tile misses the geometry. */
+  def clipStats(k: BandKernel, wkt: String): RqFn = {
+    val g = Wkt.parse(wkt)
+    RqFn("rq_clip_stats", Seq(k, wkt))(Seq(BinaryType, LongType), RqBridge.statsSchema,
+      nullResult = true)(a => RqBridge.clipStatsOf(k, bin(a(0)), long(a(1)), g))
   }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+
+  /** rq_clip(band, block) with a plan-time geometry → ARRAY<DOUBLE> of
+    * physical pixel values, NaN where the pixel center is outside the geometry
+    * or the pixel is nodata (ST_Clip, `docs/engines.md:48`); NULL when the tile
+    * misses the geometry entirely. */
+  def clip(k: BandKernel, wkt: String): RqFn = {
+    val g = Wkt.parse(wkt)
+    RqFn("rq_clip", Seq(k, wkt))(Seq(BinaryType, LongType), Doubles, nullResult = true)(
+      a => RqBridge.clipOf(k, bin(a(0)), long(a(1)), g))
+  }
+
+  /** st_polyfill(zoom) with plan-time geometry + mode → ARRAY<LONG> of
+    * covering quadbin cells (the FLATTEN/UDTF shape of the reference's
+    * `__RAQUET_REGION_BLOCKS`, `docs/performance.md:118-140`); compose with
+    * `explode` for the raster⋈vector join build side. */
+  def polyfill(wkt: String, mode: String): RqFn = {
+    val g = Wkt.parse(wkt)
+    RqFn("st_polyfill", Seq(wkt, mode))(Seq(IntegerType), Longs)(
+      a => ArrayData.toArrayData(graft.quadbin.Polyfill.cells(g, a(0).asInstanceOf[Int], mode)))
+  }
+
+  /** st_polyfill over a WKT COLUMN (the polygon-table / zonal form of
+    * [[polyfill]]): cells at `zoom` intersecting each row's geometry. The
+    * per-row parse is amortized by [[RqBridge.geomOf]]'s run-cache. */
+  def polyfillCol(mode: String): RqFn =
+    RqFn("st_polyfill", Seq(mode))(Seq(StringType, IntegerType), Longs)(
+      a => RqBridge.polyfillDyn(a(0).toString, a(1).asInstanceOf[Int], mode))
+
+  /** st_contains(wkt, lon, lat) → whether the point lies inside the
+    * geometry (center-rule semantics shared with the clip kernels). The
+    * per-row WKT parse is amortized by [[RqBridge.geomOf]]'s run-cache —
+    * the exact-test stage of a blocked spatial join. */
+  val contains: RqFn =
+    RqFn("st_contains", Nil)(Seq(StringType, DoubleType, DoubleType), BooleanType)(
+      a => RqBridge.geomOf(a(0).toString).containsPoint(dbl(a(1)), dbl(a(2))))
+
+  /** rq_clip_stats over a WKT COLUMN — the zonal-statistics form of
+    * [[clipStats]]: per-(tile, zone) stats struct, NULL when no pixel
+    * center falls inside. Same interior fast path (fused stats, no
+    * point-in-polygon loop) via the shared kernel. */
+  def clipStatsCol(k: BandKernel): RqFn =
+    RqFn("rq_clip_stats", Seq(k))(Seq(BinaryType, LongType, StringType),
+      RqBridge.statsSchema, nullResult = true)(
+      a => RqBridge.clipStatsDyn(k, bin(a(0)), long(a(1)), a(2).toString))
+
+  /** rq_clip_histogram over a WKT COLUMN: per-(tile, zone) bucket counts,
+    * NULL when the tile misses the zone — the mergeable-histogram form of
+    * zonal statistics. Element-wise sums per zone give exact zonal
+    * distributions and percentiles (zonal median) without sorting pixels. */
+  def clipHistogramCol(k: BandKernel, min: Double, max: Double, buckets: Int): RqFn =
+    RqFn("rq_clip_histogram", Seq(k, min, max, buckets))(
+      Seq(BinaryType, LongType, StringType), Longs, nullResult = true)(
+      a => RqBridge.clipHistDyn(k, bin(a(0)), long(a(1)), a(2).toString, min, max, buckets))
+
+  /** rq_zonal_histograms(band, block, zones) → per-zone bucket counts with
+    * ONE decode per tile regardless of how many zones overlap it (the
+    * collect_list-per-tile shape rq_rasterize uses). */
+  def zonalHistograms(k: BandKernel, min: Double, max: Double, buckets: Int): RqFn =
+    RqFn("rq_zonal_histograms", Seq(k, min, max, buckets))(
+      Seq(BinaryType, LongType, structs("zid" -> LongType, "wkt" -> StringType)),
+      structs("zid" -> LongType, "h" -> Longs))(
+      a => RqBridge.zonalHistsOf(k, bin(a(0)), long(a(1)), arr(a(2)), min, max, buckets))
+
+  /** rq_temporal_fit(series) → per-pixel OLS (slope[], intercept[]) blobs
+    * over a tile's sorted time series — pixel-level change detection (trend
+    * maps). One expression per block, post-aggregation, fully parallel. */
+  def temporalFit(k: BandKernel): RqFn =
+    RqFn("rq_temporal_fit", Seq(k))(Seq(stack("x")), RqBridge.temporalFitSchema)(
+      a => RqBridge.temporalFitOf(k, arr(a(0))))
+
+  /** rq_focal_mean(band, halos) → float64 band BLOB of 3×3 neighborhood
+    * means (physical values, nodata-aware, NaN = no valid window), given the
+    * tile's blob and the halo strips collected from its 8 neighbors (see
+    * [[graft.operators.Focal]] for the exchange shape and [[RqBridge.focalOf]]
+    * for halo-label semantics). A NULL halo list (isolated tile / raster
+    * corner) means an empty halo, NOT a null result — the halo contract
+    * every focal function below shares. */
+  def focalMean(k: BandKernel): RqFn =
+    RqFn("rq_focal_mean", Seq(k))(Seq(BinaryType, Halos), BinaryType, optional = Set(1))(
+      a => RqBridge.focalOf(k, bin(a(0)), arr(a(1))))
+
+  /** rq_fill_nodata(band, halos) → float64 band blob with nodata pixels
+    * IDW-filled from their valid 3×3 neighbors (see [[RqBridge.fillOf]]). */
+  def fillNodata(k: BandKernel): RqFn =
+    RqFn("rq_fill_nodata", Seq(k))(Seq(BinaryType, Halos), BinaryType, optional = Set(1))(
+      a => RqBridge.fillOf(k, bin(a(0)), arr(a(1))))
+
+  /** rq_chamfer_seed(band) → float64 blob: 0 at target-valued valid pixels,
+    * +∞ elsewhere (see [[RqBridge.chamferSeedOf]]). */
+  def chamferSeed(k: BandKernel, target: Double): RqFn =
+    RqFn("rq_chamfer_seed", Seq(k, target))(Seq(BinaryType), BinaryType)(
+      a => RqBridge.chamferSeedOf(k, bin(a(0)), target))
+
+  /** rq_chamfer_relax(dband, halos) → one chamfer-(1, √2) relaxation round
+    * (see [[RqBridge.chamferRelaxOf]]). */
+  def chamferRelax(k: BandKernel): RqFn =
+    RqFn("rq_chamfer_relax", Seq(k))(Seq(BinaryType, Halos), BinaryType, optional = Set(1))(
+      a => RqBridge.chamferRelaxOf(k, bin(a(0)), arr(a(1))))
+
+  /** rq_focal_slope(band, halos) → float64 band blob of slope degrees, Horn
+    * or (`zt`) Zevenbergen–Thorne (see [[RqBridge.slopeOf]]); NaN where the
+    * window has any missing or nodata cell. */
+  def focalSlope(k: BandKernel, cell: Double, zt: Boolean): RqFn =
+    RqFn("rq_focal_slope", Seq(k, cell, zt))(Seq(BinaryType, Halos), BinaryType,
+      optional = Set(1))(a => RqBridge.slopeOf(k, bin(a(0)), arr(a(1)), cell, zt))
+
+  /** rq_focal_hillshade_md(band, halos) → gdaldem's multidirectional
+    * hillshade as a float64 blob ([[RqBridge.hillshadeMdOf]]). */
+  def focalHillshadeMd(k: BandKernel, cell: Double, altitudeDeg: Double): RqFn =
+    RqFn("rq_focal_hillshade_md", Seq(k, cell, altitudeDeg))(Seq(BinaryType, Halos),
+      BinaryType, optional = Set(1))(
+      a => RqBridge.hillshadeMdOf(k, bin(a(0)), arr(a(1)), cell, altitudeDeg))
+
+  /** rq_focal_terrain(band, halos) → struct of slope/aspect/hillshade float64
+    * band blobs from one window pass (see [[RqBridge.terrainOf]]). */
+  def focalTerrain(k: BandKernel, cell: Double, azimuthDeg: Double,
+      altitudeDeg: Double): RqFn =
+    RqFn("rq_focal_terrain", Seq(k, cell, azimuthDeg, altitudeDeg))(Seq(BinaryType, Halos),
+      RqBridge.terrainSchema, optional = Set(1))(
+      a => RqBridge.terrainOf(k, bin(a(0)), arr(a(1)), cell, azimuthDeg, altitudeDeg))
+
+  /** rq_focal_tpi(band, halos) → struct of TPI / TRI / roughness float64
+    * band blobs from one window pass (see [[RqBridge.tpiOf]]). */
+  def focalTpi(k: BandKernel): RqFn =
+    RqFn("rq_focal_tpi", Seq(k))(Seq(BinaryType, Halos), RqBridge.tpiSchema,
+      optional = Set(1))(a => RqBridge.tpiOf(k, bin(a(0)), arr(a(1))))
+
+  /** rq_color_relief(band) → struct of r/g/b uint8 band blobs mapped
+    * through a plan-time color ramp (see [[RqBridge.colorReliefOf]]). */
+  def colorRelief(k: BandKernel, breaks: Seq[Double], colors: Seq[(Int, Int, Int)]): RqFn = {
+    require(breaks.nonEmpty && breaks.length == colors.length,
+      s"ramp needs one color per break: ${breaks.length} vs ${colors.length}")
+    require(breaks.sliding(2).forall(p => p.length < 2 || p(0) < p(1)),
+      "ramp breaks must be strictly increasing")
+    val breaksArr = breaks.toArray
+    val colorsArr = colors.map(c => Array(c._1.toDouble, c._2.toDouble, c._3.toDouble)).toArray
+    RqFn("rq_color_relief", Seq(k, breaks, colors))(Seq(BinaryType), RqBridge.colorReliefSchema)(
+      a => RqBridge.colorReliefOf(k, bin(a(0)), breaksArr, colorsArr))
+  }
+
+  /** rq_normalized_difference(band_a, band_b) → ARRAY<DOUBLE> of
+    * (a-b)/(a+b) over physical values (F14, NDVI); NaN where invalid. */
+  def normalizedDifference(k: BandPairKernel): RqFn =
+    RqFn("rq_normalized_difference", Seq(k))(Seq(BinaryType, BinaryType), Doubles)(
+      a => RqBridge.ndiffOf(k, bin(a(0)), bin(a(1))))
+
+  /** rq_normalized_difference_stats(band_a, band_b) → stats struct over the
+    * valid normalized-difference pixels (ST_NormalizedDifferenceStats,
+    * `docs/engines.md:100`) — one fused pass, no intermediate ND array; NULL
+    * when no pixel pair is valid. */
+  def ndStats(k: BandPairKernel): RqFn =
+    RqFn("rq_normalized_difference_stats", Seq(k))(Seq(BinaryType, BinaryType),
+      RqBridge.statsSchema, nullResult = true)(a => RqBridge.ndStatsOf(k, bin(a(0)), bin(a(1))))
+
+  /** rq_band_math(a, b) with a plan-time op → per-pixel ARRAY<DOUBLE> over
+    * physical values (add/sub/mul/div/ratio/min/max) — generic map algebra
+    * completing the ND/clip family. */
+  def bandMath(k: BandPairKernel, op: String): RqFn =
+    RqFn("rq_band_math", Seq(k, op))(Seq(BinaryType, BinaryType), Doubles)(
+      a => ArrayData.toArrayData(k.bandMath(bin(a(0)), bin(a(1)), op)))
+
+  /** rq_band_math_stats(a, b) → stats struct over the band-math result in
+    * one fused pass (the decode-then-select shape every scale query should
+    * use; the pixel-returning twin is [[bandMath]]). */
+  def bandMathStats(k: BandPairKernel, op: String): RqFn =
+    RqFn("rq_band_math_stats", Seq(k, op))(Seq(BinaryType, BinaryType), RqBridge.statsSchema,
+      nullResult = true)(a => RqBridge.statsRow(k.bandMathStats(bin(a(0)), bin(a(1)), op)))
 }
 
-/** rq_focal_contour(band, halos) with a plan-time `level` → contour
-  * segments INCLUDING cross-tile cells (halo-label contract of
-  * [[RqFocalMean]]; see [[RqBridge.contourHaloOf]] for ownership). */
-case class RqFocalContour(band: Expression, halos: Expression,
-    kernel: BandKernel, level: Double)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = band
-  override def right: Expression = halos
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType,
-    ArrayType(StructType(Seq(
-      StructField("dx", IntegerType),
-      StructField("dy", IntegerType),
-      StructField("vals", ArrayType(DoubleType, containsNull = true)))),
-      containsNull = true))
-  override def dataType: DataType =
-    ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "rq_focal_contour"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    if (raw == null) null
-    else RqBridge.contourHaloOf(kernel, raw.asInstanceOf[Array[Byte]],
-      halos.eval(input).asInstanceOf[ArrayData], level)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = band.genCode(ctx)
-    val hl = halos.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${hl.code}
-        boolean ${ev.isNull} = true;
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${b.isNull}) {
-          ${ev.isNull} = false;
-          ${ev.value} = ${RqBridge.B}.contourHaloOf($k, ${b.value},
-            ${hl.isNull} ? null : ${hl.value}, ${level}D);
-        }""")
-  }
-  override protected def withNewChildrenInternal(l: Expression,
-      r: Expression): Expression = copy(band = l, halos = r)
-}
-
-/** rq_rasterize(block, zones) → band blob with each zone's value burned
-  * onto pixels whose center falls inside its geometry (max value wins on
-  * overlap, untouched pixels = nodata). `zones` is the per-tile
-  * ARRAY<STRUCT<value DOUBLE, wkt STRING>> a polyfill join + collect_list
-  * produces — the vector→raster half of the engine (gdal_rasterize shape,
-  * inverse of rq_clip). */
-/** rq_region_label(block, band) → float64 blob of per-tile 4-connected
-  * equal-value component labels (global-pixel-id of each component's min
-  * pixel; see [[graft.raquet.BandKernel.regionLabel]]). */
-case class RqRegionLabel(block: Expression, band: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = block
-  override def right: Expression = band
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType, BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_region_label"
-  override protected def nullSafeEval(b: Any, raw: Any): Any =
-    RqBridge.regionLabelOf(kernel, b.asInstanceOf[Long], raw.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (b, raw) => s"${RqBridge.B}.regionLabelOf($k, $b, $raw)")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(block = l, band = r)
-}
-
-/** rq_region_sizes(block, band) → ARRAY<STRUCT<lab, n>> per-tile fragment
-  * size table (see [[graft.raquet.BandKernel.regionSizes]]) — the
-  * pixel-volume-free path for global region sizes. */
-case class RqRegionSizes(block: Expression, band: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = block
-  override def right: Expression = band
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType, BinaryType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("lab", LongType, nullable = false),
-    StructField("n", LongType, nullable = false),
-    StructField("v", DoubleType, nullable = false),
-    StructField("gx0", LongType, nullable = false),
-    StructField("gy0", LongType, nullable = false),
-    StructField("gx1", LongType, nullable = false),
-    StructField("gy1", LongType, nullable = false))), containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_region_sizes"
-  override protected def nullSafeEval(b: Any, raw: Any): Any =
-    RqBridge.regionSizesOf(kernel, b.asInstanceOf[Long], raw.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (b, raw) => s"${RqBridge.B}.regionSizesOf($k, $b, $raw)")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(block = l, band = r)
-}
-
-/** rq_region_neighbors(block, band) → ARRAY<STRUCT<la, lb>> of distinct
-  * within-tile adjacent fragment pairs with DIFFERENT values (see
-  * [[graft.raquet.BandKernel.regionNeighbors]]) — the cross-value
-  * neighbor graph the sieve APPLY step merges along. */
-case class RqRegionNeighbors(block: Expression, band: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = block
-  override def right: Expression = band
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType, BinaryType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("la", LongType, nullable = false),
-    StructField("lb", LongType, nullable = false))), containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_region_neighbors"
-  override protected def nullSafeEval(b: Any, raw: Any): Any =
-    RqBridge.regionNeighborsOf(kernel, b.asInstanceOf[Long],
-      raw.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (b, raw) => s"${RqBridge.B}.regionNeighborsOf($k, $b, $raw)")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(block = l, band = r)
-}
-
-/** rq_region_strips(block, band) → ARRAY<STRUCT<dir, idx, lab, v>> of the
-  * tile's valid boundary pixels with their fragment labels (see
-  * [[graft.raquet.BandKernel.regionStrips]]); the cross-tile label-merge
-  * edges come from equi-joining opposing strips. */
-case class RqRegionStrips(block: Expression, band: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = block
-  override def right: Expression = band
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType, BinaryType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("dir", IntegerType, nullable = false),
-    StructField("idx", IntegerType, nullable = false),
-    StructField("lab", LongType, nullable = false),
-    StructField("v", DoubleType, nullable = false))), containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_region_strips"
-  override protected def nullSafeEval(b: Any, raw: Any): Any =
-    RqBridge.regionStripsOf(kernel, b.asInstanceOf[Long],
-      raw.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (b, raw) => s"${RqBridge.B}.regionStripsOf($k, $b, $raw)")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(block = l, band = r)
-}
-
-/** rq_region_analysis(block, band) → STRUCT<strips, frags, nbrs, lab> —
-  * the fused one-decode one-union-find evaluation of rq_region_strips +
-  * rq_region_sizes (+ optionally rq_region_neighbors / rq_region_label;
-  * those fields are NULL when not requested). Each field is bit-identical
-  * to its standalone kernel's output; [[graft.operators.Regions]]
-  * checkpoints ONE such struct per tile instead of re-decoding the band
-  * blob per consumer. */
-case class RqRegionAnalysis(block: Expression, band: Expression,
-    kernel: BandKernel, withNeighbors: Boolean, withLabel: Boolean)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = block
-  override def right: Expression = band
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType, BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("strips", ArrayType(StructType(Seq(
-      StructField("dir", IntegerType, nullable = false),
-      StructField("idx", IntegerType, nullable = false),
-      StructField("lab", LongType, nullable = false),
-      StructField("v", DoubleType, nullable = false))), containsNull = false),
-      nullable = false),
-    StructField("frags", ArrayType(StructType(Seq(
-      StructField("lab", LongType, nullable = false),
-      StructField("n", LongType, nullable = false),
-      StructField("v", DoubleType, nullable = false),
-      StructField("gx0", LongType, nullable = false),
-      StructField("gy0", LongType, nullable = false),
-      StructField("gx1", LongType, nullable = false),
-      StructField("gy1", LongType, nullable = false))), containsNull = false),
-      nullable = false),
-    StructField("nbrs", ArrayType(StructType(Seq(
-      StructField("la", LongType, nullable = false),
-      StructField("lb", LongType, nullable = false))), containsNull = false),
-      nullable = true),
-    StructField("lab", BinaryType, nullable = true)))
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_region_analysis"
-  override protected def nullSafeEval(b: Any, raw: Any): Any =
-    RqBridge.regionAnalysisOf(kernel, b.asInstanceOf[Long],
-      raw.asInstanceOf[Array[Byte]], withNeighbors, withLabel)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (b, raw) =>
-      s"${RqBridge.B}.regionAnalysisOf($k, $b, $raw, $withNeighbors, $withLabel)")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(block = l, band = r)
-}
-
-/** rq_label_remap(lab, kv) → ARRAY<STRUCT<pos, v>> — per-tile label-blob
-  * remap through an O(1) hash table (see [[RqBridge.labelRemapOf]]);
-  * `asLong` picks BIGINT output (exact for labels < 2^53), else DOUBLE. */
-case class RqLabelRemap(lab: Expression, kv: Expression, kernel: BandKernel,
-    asLong: Boolean)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = lab
-  override def right: Expression = kv
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType,
-    ArrayType(StructType(Seq(
-      StructField("l", LongType),
-      StructField("o", DoubleType))), containsNull = false))
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("pos", IntegerType, nullable = false),
-    StructField("v", if (asLong) LongType else DoubleType, nullable = true))),
-    containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_label_remap"
-  override protected def nullSafeEval(l: Any, k: Any): Any =
-    RqBridge.labelRemapOf(kernel, l.asInstanceOf[Array[Byte]],
-      k.asInstanceOf[ArrayData], asLong)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (l, kv) =>
-      s"${RqBridge.B}.labelRemapOf($k, $l, $kv, $asLong)")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(lab = l, kv = r)
-}
-
-/** rq_label_remap2(lab, kv) → ARRAY<STRUCT<pos, v, v2>> — the two-output
-  * label remap (see [[RqBridge.labelRemap2Of]]): one decode + one probe
-  * per pixel resolves two per-region attributes at once, both emitted as
-  * exact longs. */
-case class RqLabelRemap2(lab: Expression, kv: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = lab
-  override def right: Expression = kv
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType,
-    ArrayType(StructType(Seq(
-      StructField("l", LongType),
-      StructField("o", DoubleType),
-      StructField("o2", DoubleType))), containsNull = false))
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("pos", IntegerType, nullable = false),
-    StructField("v", LongType, nullable = true),
-    StructField("v2", LongType, nullable = true))),
-    containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_label_remap2"
-  override protected def nullSafeEval(l: Any, k: Any): Any =
-    RqBridge.labelRemap2Of(kernel, l.asInstanceOf[Array[Byte]],
-      k.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (l, kv) =>
-      s"${RqBridge.B}.labelRemap2Of($k, $l, $kv)")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(lab = l, kv = r)
-}
-
-/** rq_region_segments(block, band, halos) → boundary segments + successor
-  * links for polygonize (see [[RqBridge.regionSegmentsOf]]). Halos use the
-  * focal-exchange layout and may be NULL (isolated tile). */
-case class RqRegionSegments(block: Expression, band: Expression,
-    halos: Expression, kernel: BandKernel)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def first: Expression = block
-  override def second: Expression = band
-  override def third: Expression = halos
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType, BinaryType,
-    ArrayType(StructType(Seq(
-      StructField("dx", IntegerType),
-      StructField("dy", IntegerType),
-      StructField("vals", ArrayType(DoubleType, containsNull = true)))),
-      containsNull = true))
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("x", LongType, nullable = false),
-    StructField("y", LongType, nullable = false),
-    StructField("dir", IntegerType, nullable = false),
-    StructField("sx", LongType, nullable = false),
-    StructField("sy", LongType, nullable = false),
-    StructField("sdir", IntegerType, nullable = false),
-    StructField("lab", LongType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "rq_region_segments"
-  override def eval(input: InternalRow): Any = {
-    val b = block.eval(input)
-    val raw = band.eval(input)
-    if (b == null || raw == null) null
-    else RqBridge.regionSegmentsOf(kernel, b.asInstanceOf[Long],
-      raw.asInstanceOf[Array[Byte]],
-      halos.eval(input).asInstanceOf[ArrayData])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val bl = block.genCode(ctx)
-    val bd = band.genCode(ctx)
-    val hl = halos.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${bl.code}
-        ${bd.code}
-        ${hl.code}
-        boolean ${ev.isNull} = true;
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${bl.isNull} && !${bd.isNull}) {
-          ${ev.isNull} = false;
-          ${ev.value} = ${RqBridge.B}.regionSegmentsOf($k, ${bl.value},
-            ${bd.value}, ${hl.isNull} ? null : ${hl.value});
-        }
-      """)
-  }
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): Expression = copy(block = f, band = s, halos = t)
-}
-
-/** rq_idw_grid(block, points) → float64 blob: gdal_grid invdist:power=2
-  * over global pixel coordinates (see [[graft.raquet.BandKernel.idwGrid]]).
-  * Points must arrive sorted by their id field — the accumulation chain
-  * is array-order-deterministic so the oracle replays it bit-for-bit. */
-case class RqIdwGrid(block: Expression, points: Expression,
-    kernel: BandKernel, radius: Long)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = block
-  override def right: Expression = points
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType,
-    ArrayType(StructType(Seq(
-      StructField("pid", LongType, nullable = false),
-      StructField("px", LongType, nullable = false),
-      StructField("py", LongType, nullable = false),
-      StructField("v", DoubleType, nullable = false))), containsNull = false))
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_idw_grid"
-  override protected def nullSafeEval(b: Any, ps: Any): Any =
-    RqBridge.idwGridOf(kernel, b.asInstanceOf[Long],
-      ps.asInstanceOf[ArrayData], radius)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (b, ps) =>
-      s"${RqBridge.B}.idwGridOf($k, $b, $ps, ${radius}L)")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(block = l, points = r)
-}
-
-/** rq_mask_range(band) → float64 blob: v ∈ [lo, hi) → NaN, nodata → NaN,
-  * else pass-through (see [[graft.raquet.BandKernel.maskRange]]). */
-case class RqMaskRange(child: Expression, kernel: BandKernel,
-    lo: Double, hi: Double)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_mask_range"
-  override protected def nullSafeEval(raw: Any): Any =
-    kernel.maskRange(raw.asInstanceOf[Array[Byte]], lo, hi)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, raw => s"$k.maskRange($raw, $lo, $hi)")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** rq_temporal_fill(stack) — linear time-axis gap fill of one block's
-  * sorted (t, blob) stack (see [[graft.raquet.BandKernel.temporalFill]]);
-  * returns (t, float64 blob) pairs in the same order. */
-case class RqTemporalFill(child: Expression, kernel: BandKernel)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(
-    ArrayType(StructType(Seq(
-      StructField("t", DoubleType, nullable = false),
-      StructField("b", BinaryType, nullable = false))), containsNull = false))
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("t", DoubleType, nullable = false),
-    StructField("vals", BinaryType, nullable = false))), containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_temporal_fill"
-  override protected def nullSafeEval(stack: Any): Any =
-    RqBridge.temporalFillOf(kernel, stack.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, stack => s"${RqBridge.B}.temporalFillOf($k, $stack)")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** rq_theilsen_mk(stack) — Theil–Sen median slope + Mann–Kendall S/tau
-  * along one block's sorted (t, blob) stack (see
-  * [[graft.raquet.BandKernel.theilSenMk]]). */
-case class RqTheilSenMk(child: Expression, kernel: BandKernel)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(
-    ArrayType(StructType(Seq(
-      StructField("t", DoubleType, nullable = false),
-      StructField("b", BinaryType, nullable = false))), containsNull = false))
-  override def dataType: DataType = StructType(Seq(
-    StructField("slope", BinaryType, nullable = false),
-    StructField("mk_s", BinaryType, nullable = false),
-    StructField("tau", BinaryType, nullable = false)))
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_theilsen_mk"
-  override protected def nullSafeEval(stack: Any): Any =
-    RqBridge.theilSenMkOf(kernel, stack.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, stack => s"${RqBridge.B}.theilSenMkOf($k, $stack)")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** rq_grid_stat(block, points) → float64 blob: the gdal_grid
-  * average / nearest / count algorithms (see
-  * [[graft.raquet.BandKernel.gridStat]]). Points must arrive sorted by
-  * their id field — the average chain is array-order-deterministic and
-  * nearest ties resolve to the first (= lowest-id) point. */
-case class RqGridStat(block: Expression, points: Expression,
-    kernel: BandKernel, radius: Long, mode: Int)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = block
-  override def right: Expression = points
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType,
-    ArrayType(StructType(Seq(
-      StructField("pid", LongType, nullable = false),
-      StructField("px", LongType, nullable = false),
-      StructField("py", LongType, nullable = false),
-      StructField("v", DoubleType, nullable = false))), containsNull = false))
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_grid_stat"
-  override protected def nullSafeEval(b: Any, ps: Any): Any =
-    RqBridge.gridStatOf(kernel, b.asInstanceOf[Long],
-      ps.asInstanceOf[ArrayData], radius, mode)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (b, ps) =>
-      s"${RqBridge.B}.gridStatOf($k, $b, $ps, ${radius}L, $mode)")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(block = l, points = r)
-}
-
-case class RqRasterize(block: Expression, zones: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = block
-  override def right: Expression = zones
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType,
-    ArrayType(StructType(Seq(
-      StructField("value", DoubleType, nullable = false),
-      StructField("wkt", StringType, nullable = false))), containsNull = false))
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_rasterize"
-  override protected def nullSafeEval(b: Any, zs: Any): Any =
-    RqBridge.rasterizeOf(kernel, b.asInstanceOf[Long], zs.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (b, zs) => s"${RqBridge.B}.rasterizeOf($k, $b, $zs)")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(block = l, zones = r)
-}
-
-/** rq_histogram(band) with plan-time [min, max) × buckets → ARRAY<BIGINT>
-  * per-tile bucket counts (GDAL convention). Element-wise sums across
-  * tiles give exact dataset-level distributions/percentiles without a
-  * global sort — the mergeable-sketch shape, exact for bounded DN ranges. */
-case class RqHistogram(child: Expression, kernel: BandKernel,
-    min: Double, max: Double, buckets: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_histogram"
-  override protected def nullSafeEval(raw: Any): Any =
-    ArrayData.toArrayData(
-      kernel.histogram(raw.asInstanceOf[Array[Byte]], min, max, buckets))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, raw =>
-      s"org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(" +
-        s"$k.histogram($raw, $min, $max, $buckets))")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** rq_child_tile(band, quadrant) → the ×2-upsampled child blob for
-  * quadrant 0..3 (Morton order) — zoom refinement, the inverse of the
-  * pyramid's 2×2-average reduce. Composes with quadbin_from_tile bit math
-  * for the child cell ids; see [[graft.raquet.Pyramid.upsampleLevel]]. */
-case class RqChildTile(band: Expression, quadrant: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = band
-  override def right: Expression = quadrant
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, IntegerType)
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_child_tile"
-  override protected def nullSafeEval(raw: Any, q: Any): Any =
-    kernel.childTile(raw.asInstanceOf[Array[Byte]], q.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (raw, q) => s"$k.childTile($raw, $q)")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(band = l, quadrant = r)
-}
-
-/** rq_composite(a, b) → first-valid-wins per-pixel mosaic blob. NULL
-  * handling is the mosaic's outer-join semantics: a missing side passes the
-  * other side's blob through BYTE-IDENTICAL (no decode/re-encode), so
-  * single-source regions of a mosaic cost nothing per tile. */
-case class RqComposite(a: Expression, b: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = a
-  override def right: Expression = b
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = a.nullable && b.nullable
-  override def prettyName: String = "rq_composite"
-  override def eval(input: InternalRow): Any = {
-    val ra = a.eval(input)
-    val rb = b.eval(input)
-    if (ra == null) rb
-    else if (rb == null) ra
-    else kernel.composite(ra.asInstanceOf[Array[Byte]], rb.asInstanceOf[Array[Byte]])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val ea = a.genCode(ctx)
-    val eb = b.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${ea.code}
-        ${eb.code}
-        boolean ${ev.isNull} = ${ea.isNull} && ${eb.isNull};
-        byte[] ${ev.value} = null;
-        if (!${ev.isNull}) {
-          if (${ea.isNull}) { ${ev.value} = ${eb.value}; }
-          else if (${eb.isNull}) { ${ev.value} = ${ea.value}; }
-          else { ${ev.value} = $k.composite(${ea.value}, ${eb.value}); }
-        }
-      """)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(a = l, b = r)
-}
-
-/** rq_summary_stats(band) → stats struct over valid pixels (A1); null for
-  * empty tiles. The partial-merge fields (count/sum/sum_sq) make the output
-  * directly mergeable by [[graft.operators.StatsMerge]] (A3). */
-case class RqSummaryStats(child: Expression, kernel: BandKernel)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = RqBridge.statsSchema
-  override def nullable: Boolean = true
-  override def prettyName: String = "rq_summary_stats"
-  override def eval(input: InternalRow): Any = {
-    val raw = child.eval(input)
-    if (raw == null) null
-    else RqBridge.statsOf(kernel, raw.asInstanceOf[Array[Byte]])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val c = child.genCode(ctx)
-    val row = ctx.freshName("statsRow")
-    ev.copy(code =
-      code"""
-        ${c.code}
-        boolean ${ev.isNull} = true;
-        InternalRow ${ev.value} = null;
-        if (!${c.isNull}) {
-          InternalRow $row = ${RqBridge.B}.statsOf($k, ${c.value});
-          if ($row != null) { ${ev.isNull} = false; ${ev.value} = $row; }
-        }
-      """)
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** rq_raster_value(band, block, lon, lat) → physical value at a point (F12);
-  * NULL outside the tile / at nodata pixels. */
-case class RqRasterValue(
-    band: Expression, block: Expression, lon: Expression, lat: Expression,
-    kernel: BandKernel)
-    extends QuaternaryExpression with ImplicitCastInputTypes {
-  override def first: Expression = band
-  override def second: Expression = block
-  override def third: Expression = lon
-  override def fourth: Expression = lat
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(BinaryType, LongType, DoubleType, DoubleType)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "rq_raster_value"
-  override protected def nullSafeEval(b: Any, blk: Any, x: Any, y: Any): Any = {
-    val v = kernel.valueAt(b.asInstanceOf[Array[Byte]], blk.asInstanceOf[Long],
-      x.asInstanceOf[Double], y.asInstanceOf[Double])
-    if (java.lang.Double.isNaN(v)) null else v
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    nullSafeCodeGen(ctx, ev, (b, blk, x, y) => {
-      val v = ctx.freshName("v")
-      s"""
-         |double $v = $k.valueAt($b, $blk, $x, $y);
-         |if (Double.isNaN($v)) { ${ev.isNull} = true; } else { ${ev.value} = $v; }
-       """.stripMargin
-    })
-  }
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression, q: Expression): Expression =
-    copy(band = f, block = s, lon = t, lat = q)
-}
-
-/** rq_clip_stats(band, block) with a plan-time geometry → stats struct over
-  * valid pixels whose center is inside the geometry (F13+A1, the per-tile
-  * half of ST_RegionStats); null when the tile misses the geometry. */
-case class RqClipStats(band: Expression, block: Expression,
-    kernel: BandKernel, wkt: String)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  @transient private lazy val geom: Geom = Wkt.parse(wkt)
-  override def left: Expression = band
-  override def right: Expression = block
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, LongType)
-  override def dataType: DataType = RqBridge.statsSchema
-  override def nullable: Boolean = true
-  override def prettyName: String = "rq_clip_stats"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    val blk = block.eval(input)
-    if (raw == null || blk == null) null
-    else RqBridge.clipStatsOf(kernel, raw.asInstanceOf[Array[Byte]],
-      blk.asInstanceOf[Long], geom)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val g = ctx.addReferenceObj("geom", geom, classOf[Geom].getName)
-    val b = band.genCode(ctx)
-    val blk = block.genCode(ctx)
-    val row = ctx.freshName("clipRow")
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${blk.code}
-        boolean ${ev.isNull} = true;
-        InternalRow ${ev.value} = null;
-        if (!${b.isNull} && !${blk.isNull}) {
-          InternalRow $row = ${RqBridge.B}.clipStatsOf($k, ${b.value}, ${blk.value}, $g);
-          if ($row != null) { ${ev.isNull} = false; ${ev.value} = $row; }
-        }
-      """)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(band = l, block = r)
-}
-
-/** rq_clip(band, block) with a plan-time geometry → ARRAY<DOUBLE> of
-  * physical pixel values, NaN where the pixel center is outside the geometry
-  * or the pixel is nodata (ST_Clip, `docs/engines.md:48`); NULL when the tile
-  * misses the geometry entirely. */
-case class RqClip(band: Expression, block: Expression,
-    kernel: BandKernel, wkt: String)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  @transient private lazy val geom: Geom = Wkt.parse(wkt)
-  override def left: Expression = band
-  override def right: Expression = block
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, LongType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "rq_clip"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    val blk = block.eval(input)
-    if (raw == null || blk == null) null
-    else RqBridge.clipOf(kernel, raw.asInstanceOf[Array[Byte]],
-      blk.asInstanceOf[Long], geom)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val g = ctx.addReferenceObj("geom", geom, classOf[Geom].getName)
-    val b = band.genCode(ctx)
-    val blk = block.genCode(ctx)
-    val arr = ctx.freshName("clipArr")
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${blk.code}
-        boolean ${ev.isNull} = true;
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${b.isNull} && !${blk.isNull}) {
-          org.apache.spark.sql.catalyst.util.ArrayData $arr =
-            ${RqBridge.B}.clipOf($k, ${b.value}, ${blk.value}, $g);
-          if ($arr != null) { ${ev.isNull} = false; ${ev.value} = $arr; }
-        }
-      """)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(band = l, block = r)
-}
-
-/** st_polyfill over a WKT COLUMN (the polygon-table / zonal form of
-  * [[RqPolyfill]]): cells at `zoom` intersecting each row's geometry. The
-  * per-row parse is amortized by [[RqBridge.geomOf]]'s run-cache. */
-case class RqPolyfillDyn(wkt: Expression, zoom: Expression, mode: String)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = wkt
-  override def right: Expression = zoom
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "st_polyfill"
-  override protected def nullSafeEval(w: Any, z: Any): Any =
-    RqBridge.polyfillDyn(w.toString, z.asInstanceOf[Int], mode)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (w, z) =>
-      s"""${RqBridge.B}.polyfillDyn($w.toString(), $z, "$mode")""")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(wkt = l, zoom = r)
-}
-
-/** rq_clip_histogram over a WKT COLUMN: per-(tile, zone) bucket counts,
-  * NULL when the tile misses the zone — the mergeable-histogram form of
-  * zonal statistics. Element-wise sums per zone give exact zonal
-  * distributions and percentiles (zonal median) without sorting pixels. */
-case class RqClipHistDyn(band: Expression, block: Expression,
-    wkt: Expression, kernel: BandKernel, min: Double, max: Double,
-    buckets: Int)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def first: Expression = band
-  override def second: Expression = block
-  override def third: Expression = wkt
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(BinaryType, LongType, StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "rq_clip_histogram"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    val blk = block.eval(input)
-    val w = wkt.eval(input)
-    if (raw == null || blk == null || w == null) null
-    else RqBridge.clipHistDyn(kernel, raw.asInstanceOf[Array[Byte]],
-      blk.asInstanceOf[Long], w.toString, min, max, buckets)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = band.genCode(ctx)
-    val blk = block.genCode(ctx)
-    val w = wkt.genCode(ctx)
-    val arr = ctx.freshName("zonalHist")
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${blk.code}
-        ${w.code}
-        boolean ${ev.isNull} = true;
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${b.isNull} && !${blk.isNull} && !${w.isNull}) {
-          org.apache.spark.sql.catalyst.util.ArrayData $arr = ${RqBridge.B}.clipHistDyn(
-            $k, ${b.value}, ${blk.value}, ${w.value}.toString(), $min, $max, $buckets);
-          if ($arr != null) { ${ev.isNull} = false; ${ev.value} = $arr; }
-        }
-      """)
-  }
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): Expression = copy(band = f, block = s, wkt = t)
-}
-
-/** rq_temporal_fit(series) → per-pixel OLS (slope[], intercept[]) blobs
-  * over a tile's sorted time series — pixel-level change detection (trend
-  * maps). One expression per block, post-aggregation, fully parallel. */
-case class RqTemporalFit(series: Expression, kernel: BandKernel)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def child: Expression = series
-  override def inputTypes: Seq[AbstractDataType] = Seq(
-    ArrayType(StructType(Seq(
-      StructField("x", DoubleType, nullable = false),
-      StructField("b", BinaryType, nullable = false))), containsNull = false))
-  override def dataType: DataType = RqBridge.temporalFitSchema
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_temporal_fit"
-  override protected def nullSafeEval(s: Any): Any =
-    RqBridge.temporalFitOf(kernel, s.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, s => s"${RqBridge.B}.temporalFitOf($k, $s)")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(series = c)
-}
-
-/** st_contains(wkt, lon, lat) → whether the point lies inside the
-  * geometry (center-rule semantics shared with the clip kernels). The
-  * per-row WKT parse is amortized by [[RqBridge.geomOf]]'s run-cache —
-  * the exact-test stage of a blocked spatial join. */
-case class StContains(wkt: Expression, lon: Expression, lat: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def first: Expression = wkt
-  override def second: Expression = lon
-  override def third: Expression = lat
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(StringType, DoubleType, DoubleType)
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "st_contains"
-  override protected def nullSafeEval(w: Any, x: Any, y: Any): Any =
-    RqBridge.geomOf(w.toString)
-      .containsPoint(x.asInstanceOf[Double], y.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (w, x, y) =>
-      s"${RqBridge.B}.geomOf($w.toString()).containsPoint($x, $y)")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): Expression = copy(wkt = f, lon = s, lat = t)
-}
-
-/** rq_zonal_histograms(band, block, zones) → per-zone bucket counts with
-  * ONE decode per tile regardless of how many zones overlap it (the
-  * collect_list-per-tile shape rq_rasterize uses). */
-case class RqZonalHists(band: Expression, block: Expression,
-    zones: Expression, kernel: BandKernel, min: Double, max: Double,
-    buckets: Int)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def first: Expression = band
-  override def second: Expression = block
-  override def third: Expression = zones
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, LongType,
-    ArrayType(StructType(Seq(
-      StructField("zid", LongType, nullable = false),
-      StructField("wkt", StringType, nullable = false))), containsNull = false))
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("zid", LongType, nullable = false),
-    StructField("h", ArrayType(LongType, containsNull = false), nullable = false))),
-    containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_zonal_histograms"
-  override protected def nullSafeEval(raw: Any, blk: Any, zs: Any): Any =
-    RqBridge.zonalHistsOf(kernel, raw.asInstanceOf[Array[Byte]],
-      blk.asInstanceOf[Long], zs.asInstanceOf[ArrayData], min, max, buckets)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, (raw, blk, zs) =>
-      s"${RqBridge.B}.zonalHistsOf($k, $raw, $blk, $zs, $min, $max, $buckets)")
-  }
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): Expression = copy(band = f, block = s, zones = t)
-}
-
-/** rq_clip_stats over a WKT COLUMN — the zonal-statistics form of
-  * [[RqClipStats]]: per-(tile, zone) stats struct, NULL when no pixel
-  * center falls inside. Same interior fast path (fused stats, no
-  * point-in-polygon loop) via the shared kernel. */
-case class RqClipStatsDyn(band: Expression, block: Expression,
-    wkt: Expression, kernel: BandKernel)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def first: Expression = band
-  override def second: Expression = block
-  override def third: Expression = wkt
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(BinaryType, LongType, StringType)
-  override def dataType: DataType = RqBridge.statsSchema
-  override def nullable: Boolean = true
-  override def prettyName: String = "rq_clip_stats"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    val blk = block.eval(input)
-    val w = wkt.eval(input)
-    if (raw == null || blk == null || w == null) null
-    else RqBridge.clipStatsDyn(kernel, raw.asInstanceOf[Array[Byte]],
-      blk.asInstanceOf[Long], w.toString)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = band.genCode(ctx)
-    val blk = block.genCode(ctx)
-    val w = wkt.genCode(ctx)
-    val row = ctx.freshName("zonalStats")
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${blk.code}
-        ${w.code}
-        boolean ${ev.isNull} = true;
-        InternalRow ${ev.value} = null;
-        if (!${b.isNull} && !${blk.isNull} && !${w.isNull}) {
-          InternalRow $row = ${RqBridge.B}.clipStatsDyn(
-            $k, ${b.value}, ${blk.value}, ${w.value}.toString());
-          if ($row != null) { ${ev.isNull} = false; ${ev.value} = $row; }
-        }
-      """)
-  }
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): Expression = copy(band = f, block = s, wkt = t)
-}
-
-/** rq_focal_mean(band, halos) → float64 band BLOB of 3×3 neighborhood
-  * means (physical values, nodata-aware, NaN = no valid window), given the
-  * tile's blob and the halo strips collected from its 8 neighbors (see
-  * [[graft.operators.Focal]] for the exchange shape and [[RqBridge.focalOf]]
-  * for halo-label semantics). A NULL halo list (isolated tile / raster
-  * corner) means an empty halo, NOT a null result. */
-case class RqFocalMean(band: Expression, halos: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = band
-  override def right: Expression = halos
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType,
-    ArrayType(StructType(Seq(
-      StructField("dx", IntegerType),
-      StructField("dy", IntegerType),
-      StructField("vals", ArrayType(DoubleType, containsNull = true)))),
-      containsNull = true))
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "rq_focal_mean"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    if (raw == null) null
-    else RqBridge.focalOf(kernel, raw.asInstanceOf[Array[Byte]],
-      halos.eval(input).asInstanceOf[ArrayData])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = band.genCode(ctx)
-    val hl = halos.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${hl.code}
-        boolean ${ev.isNull} = true;
-        byte[] ${ev.value} = null;
-        if (!${b.isNull}) {
-          ${ev.isNull} = false;
-          ${ev.value} = ${RqBridge.B}.focalOf($k, ${b.value},
-            ${hl.isNull} ? null : ${hl.value});
-        }
-      """)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(band = l, halos = r)
-}
-
-/** rq_fill_nodata(band, halos) → float64 band blob with nodata pixels
-  * IDW-filled from their valid 3×3 neighbors (see [[RqBridge.fillOf]]).
-  * Same halo contract as [[RqFocalMean]]. */
-case class RqFillNodata(band: Expression, halos: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = band
-  override def right: Expression = halos
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType,
-    ArrayType(StructType(Seq(
-      StructField("dx", IntegerType),
-      StructField("dy", IntegerType),
-      StructField("vals", ArrayType(DoubleType, containsNull = true)))),
-      containsNull = true))
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "rq_fill_nodata"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    if (raw == null) null
-    else RqBridge.fillOf(kernel, raw.asInstanceOf[Array[Byte]],
-      halos.eval(input).asInstanceOf[ArrayData])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = band.genCode(ctx)
-    val hl = halos.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${hl.code}
-        boolean ${ev.isNull} = true;
-        byte[] ${ev.value} = null;
-        if (!${b.isNull}) {
-          ${ev.isNull} = false;
-          ${ev.value} = ${RqBridge.B}.fillOf($k, ${b.value},
-            ${hl.isNull} ? null : ${hl.value});
-        }
-      """)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(band = l, halos = r)
-}
-
-/** rq_chamfer_seed(band) → float64 blob: 0 at target-valued valid pixels,
-  * +∞ elsewhere (see [[RqBridge.chamferSeedOf]]). */
-case class RqChamferSeed(band: Expression, kernel: BandKernel, target: Double)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def child: Expression = band
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "rq_chamfer_seed"
-  override protected def nullSafeEval(raw: Any): Any =
-    RqBridge.chamferSeedOf(kernel, raw.asInstanceOf[Array[Byte]], target)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    defineCodeGen(ctx, ev, c => s"${RqBridge.B}.chamferSeedOf($k, $c, $target)")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(band = c)
-}
-
-/** rq_chamfer_relax(dband, halos) → one chamfer-(1, √2) relaxation round
-  * (see [[RqBridge.chamferRelaxOf]]). Same halo contract as
-  * [[RqFocalMean]]. */
-case class RqChamferRelax(band: Expression, halos: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = band
-  override def right: Expression = halos
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType,
-    ArrayType(StructType(Seq(
-      StructField("dx", IntegerType),
-      StructField("dy", IntegerType),
-      StructField("vals", ArrayType(DoubleType, containsNull = true)))),
-      containsNull = true))
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "rq_chamfer_relax"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    if (raw == null) null
-    else RqBridge.chamferRelaxOf(kernel, raw.asInstanceOf[Array[Byte]],
-      halos.eval(input).asInstanceOf[ArrayData])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = band.genCode(ctx)
-    val hl = halos.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${hl.code}
-        boolean ${ev.isNull} = true;
-        byte[] ${ev.value} = null;
-        if (!${b.isNull}) {
-          ${ev.isNull} = false;
-          ${ev.value} = ${RqBridge.B}.chamferRelaxOf($k, ${b.value},
-            ${hl.isNull} ? null : ${hl.value});
-        }
-      """)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(band = l, halos = r)
-}
-
-/** rq_focal_slope(band, halos) → float64 band blob of Horn's-method slope
-  * degrees (see [[RqBridge.slopeOf]]); NaN where the 3×3 window has any
-  * missing or nodata cell. Same halo contract as [[RqFocalMean]]. */
-case class RqFocalSlope(band: Expression, halos: Expression,
-    kernel: BandKernel, cell: Double, zt: Boolean = false)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = band
-  override def right: Expression = halos
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType,
-    ArrayType(StructType(Seq(
-      StructField("dx", IntegerType),
-      StructField("dy", IntegerType),
-      StructField("vals", ArrayType(DoubleType, containsNull = true)))),
-      containsNull = true))
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "rq_focal_slope"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    if (raw == null) null
-    else RqBridge.slopeOf(kernel, raw.asInstanceOf[Array[Byte]],
-      halos.eval(input).asInstanceOf[ArrayData], cell, zt)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = band.genCode(ctx)
-    val hl = halos.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${hl.code}
-        boolean ${ev.isNull} = true;
-        byte[] ${ev.value} = null;
-        if (!${b.isNull}) {
-          ${ev.isNull} = false;
-          ${ev.value} = ${RqBridge.B}.slopeOf($k, ${b.value},
-            ${hl.isNull} ? null : ${hl.value}, $cell, $zt);
-        }
-      """)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(band = l, halos = r)
-}
-
-/** rq_focal_hillshade_md(band, halos) → gdaldem's multidirectional
-  * hillshade as a float64 blob ([[RqBridge.hillshadeMdOf]]). Same halo
-  * contract as [[RqFocalMean]]. */
-case class RqFocalHillshadeMd(band: Expression, halos: Expression,
-    kernel: BandKernel, cell: Double, altitudeDeg: Double)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = band
-  override def right: Expression = halos
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType,
-    ArrayType(StructType(Seq(
-      StructField("dx", IntegerType),
-      StructField("dy", IntegerType),
-      StructField("vals", ArrayType(DoubleType, containsNull = true)))),
-      containsNull = true))
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "rq_focal_hillshade_md"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    if (raw == null) null
-    else RqBridge.hillshadeMdOf(kernel, raw.asInstanceOf[Array[Byte]],
-      halos.eval(input).asInstanceOf[ArrayData], cell, altitudeDeg)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = band.genCode(ctx)
-    val hl = halos.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${hl.code}
-        boolean ${ev.isNull} = true;
-        byte[] ${ev.value} = null;
-        if (!${b.isNull}) {
-          ${ev.isNull} = false;
-          ${ev.value} = ${RqBridge.B}.hillshadeMdOf($k, ${b.value},
-            ${hl.isNull} ? null : ${hl.value}, $cell, $altitudeDeg);
-        }
-      """)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(band = l, halos = r)
-}
-
-/** rq_focal_terrain(band, halos) → struct of slope/aspect/hillshade float64
-  * band blobs from one window pass (see [[RqBridge.terrainOf]]). Same halo
-  * contract as [[RqFocalMean]]. */
-case class RqFocalTerrain(band: Expression, halos: Expression,
-    kernel: BandKernel, cell: Double, azimuthDeg: Double, altitudeDeg: Double)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = band
-  override def right: Expression = halos
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType,
-    ArrayType(StructType(Seq(
-      StructField("dx", IntegerType),
-      StructField("dy", IntegerType),
-      StructField("vals", ArrayType(DoubleType, containsNull = true)))),
-      containsNull = true))
-  override def dataType: DataType = RqBridge.terrainSchema
-  override def nullable: Boolean = true
-  override def prettyName: String = "rq_focal_terrain"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    if (raw == null) null
-    else RqBridge.terrainOf(kernel, raw.asInstanceOf[Array[Byte]],
-      halos.eval(input).asInstanceOf[ArrayData], cell, azimuthDeg, altitudeDeg)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = band.genCode(ctx)
-    val hl = halos.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${hl.code}
-        boolean ${ev.isNull} = true;
-        InternalRow ${ev.value} = null;
-        if (!${b.isNull}) {
-          ${ev.isNull} = false;
-          ${ev.value} = ${RqBridge.B}.terrainOf($k, ${b.value},
-            ${hl.isNull} ? null : ${hl.value}, $cell, $azimuthDeg, $altitudeDeg);
-        }
-      """)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(band = l, halos = r)
-}
-
-/** rq_color_relief(band) → struct of r/g/b uint8 band blobs mapped
-  * through a plan-time color ramp (see [[RqBridge.colorReliefOf]]). */
-case class RqColorRelief(child: Expression, kernel: BandKernel,
-    breaks: Seq[Double], colors: Seq[(Int, Int, Int)])
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(breaks.nonEmpty && breaks.length == colors.length,
-    s"ramp needs one color per break: ${breaks.length} vs ${colors.length}")
-  require(breaks.sliding(2).forall(p => p.length < 2 || p(0) < p(1)),
-    "ramp breaks must be strictly increasing")
-  private val breaksArr = breaks.toArray
-  private val colorsArr = colors.map(c =>
-    Array(c._1.toDouble, c._2.toDouble, c._3.toDouble)).toArray
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = RqBridge.colorReliefSchema
-  override def nullable: Boolean = true
-  override def prettyName: String = "rq_color_relief"
-  override def eval(input: InternalRow): Any = {
-    val raw = child.eval(input)
-    if (raw == null) null
-    else RqBridge.colorReliefOf(kernel, raw.asInstanceOf[Array[Byte]],
-      breaksArr, colorsArr)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val br = ctx.addReferenceObj("breaks", breaksArr, "double[]")
-    val co = ctx.addReferenceObj("colors", colorsArr, "double[][]")
-    nullSafeCodeGen(ctx, ev, raw =>
-      s"${ev.value} = ${RqBridge.B}.colorReliefOf($k, $raw, $br, $co);")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** rq_focal_tpi(band, halos) → struct of TPI / TRI / roughness float64
-  * band blobs from one window pass (see [[RqBridge.tpiOf]]). Same halo
-  * contract as [[RqFocalMean]]. */
-case class RqFocalTpi(band: Expression, halos: Expression, kernel: BandKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression = band
-  override def right: Expression = halos
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType,
-    ArrayType(StructType(Seq(
-      StructField("dx", IntegerType),
-      StructField("dy", IntegerType),
-      StructField("vals", ArrayType(DoubleType, containsNull = true)))),
-      containsNull = true))
-  override def dataType: DataType = RqBridge.tpiSchema
-  override def nullable: Boolean = true
-  override def prettyName: String = "rq_focal_tpi"
-  override def eval(input: InternalRow): Any = {
-    val raw = band.eval(input)
-    if (raw == null) null
-    else RqBridge.tpiOf(kernel, raw.asInstanceOf[Array[Byte]],
-      halos.eval(input).asInstanceOf[ArrayData])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandKernel].getName)
-    val b = band.genCode(ctx)
-    val hl = halos.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${hl.code}
-        boolean ${ev.isNull} = true;
-        InternalRow ${ev.value} = null;
-        if (!${b.isNull}) {
-          ${ev.isNull} = false;
-          ${ev.value} = ${RqBridge.B}.tpiOf($k, ${b.value},
-            ${hl.isNull} ? null : ${hl.value});
-        }
-      """)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(band = l, halos = r)
-}
-
-/** rq_normalized_difference_stats(band_a, band_b) → stats struct over the
-  * valid normalized-difference pixels (ST_NormalizedDifferenceStats,
-  * `docs/engines.md:100`) — one fused pass, no intermediate ND array; NULL
-  * when no pixel pair is valid. */
-case class RqNdStats(left: Expression, right: Expression, kernel: BandPairKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = RqBridge.statsSchema
-  override def nullable: Boolean = true
-  override def prettyName: String = "rq_normalized_difference_stats"
-  override def eval(input: InternalRow): Any = {
-    val a = left.eval(input)
-    val b = right.eval(input)
-    if (a == null || b == null) null
-    else RqBridge.ndStatsOf(kernel, a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandPairKernel].getName)
-    val a = left.genCode(ctx)
-    val b = right.genCode(ctx)
-    val row = ctx.freshName("ndStatsRow")
-    ev.copy(code =
-      code"""
-        ${a.code}
-        ${b.code}
-        boolean ${ev.isNull} = true;
-        InternalRow ${ev.value} = null;
-        if (!${a.isNull} && !${b.isNull}) {
-          InternalRow $row = ${RqBridge.B}.ndStatsOf($k, ${a.value}, ${b.value});
-          if ($row != null) { ${ev.isNull} = false; ${ev.value} = $row; }
-        }
-      """)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** rq_normalized_difference(band_a, band_b) → ARRAY<DOUBLE> of
-  * (a-b)/(a+b) over physical values (F14, NDVI); NaN where invalid. */
-/** rq_band_math(a, b) with a plan-time op → per-pixel ARRAY<DOUBLE> over
-  * physical values (add/sub/mul/div/ratio/min/max) — generic map algebra
-  * completing the ND/clip family. */
-case class RqBandMath(left: Expression, right: Expression,
-    kernel: BandPairKernel, op: String)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_band_math"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    ArrayData.toArrayData(kernel.bandMath(
-      a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]], op))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandPairKernel].getName)
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"""org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($k.bandMath($a, $b, "$op"))""")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** rq_band_math_stats(a, b) → stats struct over the band-math result in
-  * one fused pass (the decode-then-select shape every scale query should
-  * use; the pixel-returning twin is [[RqBandMath]]). */
-case class RqBandMathStats(left: Expression, right: Expression,
-    kernel: BandPairKernel, op: String)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = RqBridge.statsSchema
-  override def nullable: Boolean = true
-  override def prettyName: String = "rq_band_math_stats"
-  override def eval(input: InternalRow): Any = {
-    val a = left.eval(input)
-    val b = right.eval(input)
-    if (a == null || b == null) null
-    else RqBridge.statsRow(kernel.bandMathStats(
-      a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]], op))
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandPairKernel].getName)
-    val a = left.genCode(ctx)
-    val b = right.genCode(ctx)
-    val row = ctx.freshName("bmStats")
-    ev.copy(code =
-      code"""
-        ${a.code}
-        ${b.code}
-        boolean ${ev.isNull} = true;
-        InternalRow ${ev.value} = null;
-        if (!${a.isNull} && !${b.isNull}) {
-          InternalRow $row = ${RqBridge.B}.statsRow(
-            $k.bandMathStats(${a.value}, ${b.value}, "$op"));
-          if ($row != null) { ${ev.isNull} = false; ${ev.value} = $row; }
-        }
-      """)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-case class RqNormalizedDifference(left: Expression, right: Expression,
-    kernel: BandPairKernel)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rq_normalized_difference"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    RqBridge.ndiffOf(kernel, a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("kernel", kernel, classOf[BandPairKernel].getName)
-    defineCodeGen(ctx, ev, (a, b) => s"${RqBridge.B}.ndiffOf($k, $a, $b)")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** st_polyfill(zoom) with plan-time geometry + mode → ARRAY<LONG> of
-  * covering quadbin cells (the FLATTEN/UDTF shape of the reference's
-  * `__RAQUET_REGION_BLOCKS`, `docs/performance.md:118-140`); compose with
-  * `explode` for the raster⋈vector join build side. */
-case class RqPolyfill(wkt: String, child: Expression, mode: String)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  @transient private lazy val geom: Geom = Wkt.parse(wkt)
-  override def inputTypes: Seq[AbstractDataType] = Seq(IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "st_polyfill"
-  override protected def nullSafeEval(z: Any): Any =
-    ArrayData.toArrayData(graft.quadbin.Polyfill.cells(geom, z.asInstanceOf[Int], mode))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val g = ctx.addReferenceObj("geom", geom, classOf[Geom].getName)
-    defineCodeGen(ctx, ev, z =>
-      s"""org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-          graft.quadbin.Polyfill.cells($g, $z, "$mode"))""")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
 
 /** st_quadbin_intersects(block) with plan-time geometry → does the tile's
   * WGS84 bbox intersect the geometry (P4, `docs/engines.md:47`)? Used as a
